@@ -59,7 +59,7 @@ object PlanDump {
     "bucketed_join" ->
       "Storage-layout co-location: both fact scans carry the catalog bucket spec, so the sort-merge join, the bucket-key aggregation, and the TakeOrderedAndProject top-100 all run with ZERO exchanges — the one shuffle was paid at layout-write time",
     "containment_neardup" ->
-      "PPJoin containment join, scale-invariant shape: the shingle table is computed ONCE into an InMemoryRelation (five consumers), every corpus-sized join is a pinned shuffle_hash/merge (static post-explode estimates would otherwise broadcast the corpus at small SF), and the only broadcast is the bounded df>cap hot set; the star tier carries an observe() metric that logs when the degradation fires",
+      "PPJoin containment join, scale-invariant shape: the shingle table is computed ONCE into an InMemoryRelation (five consumers), every corpus-sized join is a pinned shuffle_hash/merge (static post-explode estimates would otherwise broadcast the corpus at small SF), the verify is ONE merge join over melted candidate endpoints, and the only broadcasts are the bounded df>cap hot set; the star tier carries an observe() metric that logs when the degradation fires",
     "duplicate_spans_sampled" ->
       "Content-defined window sampling: the mod-8 md5-prefix filter sits map-side BEFORE the dup-content aggregate, so the exchange carries ~1/8 of the windows; merge window stays doc_id-partitioned",
     "cdc_chunk_dedup" ->

@@ -621,129 +621,183 @@ object Dedup {
     * containment) for every ordered pair with
     * C(a→b) = |sh(a) ∩ sh(b)| / |sh(a)| >= 0.8 — the near-SUBSET
     * relation Jaccard misses when a short doc is wholly embedded in a
-    * long one.
+    * long one. PRECONDITION: `idCol` is unique per row (the verify
+    * reassembles each pair from one row per endpoint id).
     *
-    * PPJoin-family prefix filter: if C(a→b) >= 4/5 then a misses at
-    * most floor(|sh(a)|/5) of its own shingles in b, so ANY
-    * floor(|sh(a)|/5)+1 of a's shingles must hit b — we index a on its
-    * p RAREST shingles (global df order, which minimizes join fan-out)
-    * against b's full postings, then verify exactly with the codegen'd
-    * sorted-merge intersect. The 5·|sh(b)| >= 4·|sh(a)| length filter
-    * is exact integer math (a float ceil overshoots by 1 ulp at
-    * n%5==0 and would prune true boundary pairs).
+    * This operator and the streaming increment
+    * ([[graft.streaming.EventStreams.streamingContainment]]) share one
+    * candidate-and-verify core, the PPJoin prefix filter (Xiao et al.,
+    * WWW 2008):
+    *   - Pigeonhole bound: if C(a→b) >= 4/5 then a misses at most
+    *     floor(|sh(a)|/5) of its own shingles in b, so ANY
+    *     floor(n/5)+1 of a's n shingles must hit b. a is indexed on
+    *     that many shingles ([[containmentPrefixRows]], rarest first by
+    *     df, which minimizes join fan-out but never decides coverage —
+    *     so a prefix ranked against an older df snapshot stays
+    *     complete) and joined against b's full postings
+    *     ([[containmentCandidates]]).
+    *   - Length filter: C(a→b) >= 4/5 forces 5·|sh(b)| >= 4·|sh(a)|,
+    *     checked in exact integer math (a float ceil(0.8n) overshoots
+    *     by 1 ulp at n%5==0 and would prune true boundary pairs).
+    *   - Hot-star trade: the prefix bounds candidates only while dfs
+    *     VARY. On N identical docs every shingle has df=N and each
+    *     prefix row would join N full postings: ~0.2·|sh|·N² rows. So
+    *     a shingle whose posting list exceeds `maxPosting` leaves the
+    *     cold join (anti join against the hot set) and instead pairs
+    *     each member with its min-id representative, BOTH orientations
+    *     — O(df) per hot shingle instead of O(df²). Below the cap the
+    *     filter is LOSSLESS (DedupSpec and the DuckDB brute-force
+    *     oracle prove it); above it, member-member pairs whose every
+    *     shared shingle is hot are traded for the linear bound,
+    *     surfaced by an observed metric ([[observeStarPairs]]) and
+    *     audited by [[hotPostingReport]].
+    *   - Verify ([[containmentVerify]]): exact sorted-merge intersect
+    *     of both endpoints' shingle sets, looked up in ONE doc-id
+    *     merge join over the melted candidate endpoints; this is where
+    *     the unique-id precondition binds.
     *
-    * Hot-posting defense (the family-standard degenerate-corpus tier,
-    * mirroring [[cappedPairs]]): the prefix filter bounds candidates
-    * only while shingle document-frequencies VARY. On a
-    * boilerplate-degenerate corpus — N identical docs — every shingle
-    * has df=N, the rarest-df prefix still indexes ~0.2·|sh| shingles
-    * per doc, and each would join N full postings: ~0.2·|sh|·N²
-    * candidate rows. So a shingle whose posting list exceeds
-    * `maxPosting` leaves the prefix join entirely and instead emits
-    * star pairs against its min-id posting representative, BOTH
-    * orientations (containment is asymmetric), each passing the same
-    * exact verify: O(df) per hot shingle instead of O(df²). Below the
-    * cap the filter is LOSSLESS (the brute-force DuckDB oracle proves
-    * it per corpus); above it, member-member pairs whose every shared
-    * shingle is hot are traded for the linear bound — reachable only
-    * via the representative, audited by [[hotPostingReport]], and
-    * stress-pinned by ScaleStressSpec's boiler_containment scenario.
-    *
-    * Scale shape: every stage is a keyed shuffle (df agg on g, per-doc
-    * rank window, postings join on the rare g, verify joins on doc
-    * ids); nothing is quadratic in the corpus.
+    * Scale shape: every stage is a keyed shuffle (df aggregate on g,
+    * per-doc rank window, postings join on the prefix g, verify join
+    * on doc ids); nothing is quadratic in the corpus. Corpus-sized
+    * joins are pinned shuffle_hash/merge because post-explode size
+    * estimates undershoot (the 0.6 MB sf0.1 parquet footprint made
+    * the planner broadcast the exploded postings and the shingle
+    * table); the only broadcasts are the hot set, bounded at
+    * |postings|/maxPosting rows.
     * ref: the reference has no containment operator — §7.4 expansion.
     */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
       shingleLen: Int = 3, minShingles: Int = 5,
       maxPosting: Int = DefaultMaxPosting): DataFrame = {
-    import graft.functions.VectorExpressions.sorted_intersect_size
-    // The plan consumes the shingle table five times (two posting
-    // joins, the df aggregate, two verify joins) and the df aggregate
-    // twice (prefix filter + hot-set probe). Declaratively that
-    // re-ran the scan+tokenize+shingle lineage SEVEN times per
-    // execution, and Catalyst's per-consumer column pruning made the
-    // two dfTab aggregates structurally different, so ReuseExchange
-    // never fired (attributed round 14, BASELINE.md). Persisting sh
-    // computes the shingles ONCE — at 100 TB the tokenize+shingle
-    // pass over the corpus is the dominant CPU term, so 5x of it is
-    // exactly what a multi-pass similarity join must not pay; the df
-    // aggregate stays unpersisted (two cheap aggs over the cache
-    // beat a third cache's build/read stage — measured). The
-    // harness/caller unpersists after the action (Bench does; same
-    // contract as dedupIncrement's store).
+    // The plan reads the shingle table five times (df aggregate,
+    // prefix rank, cold-join postings, star postings, verify).
+    // Unpersisted, each read re-ran the scan + tokenize + shingle
+    // lineage, the dominant CPU term (BASELINE.md round 14); the df
+    // aggregate stays unpersisted (cheap aggs over the cache beat
+    // another cache's build/read stage — measured). The caller
+    // unpersists after the action.
     val sh = containmentShingles(df, idCol, textCol, shingleLen, minShingles)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val posts = sh.select(col("doc_id"), size(col("sh")).as("nsh"),
+    containmentPairsOf(sh, containmentShingleStats(containmentPostings(sh)),
+      maxPosting)
+  }
+
+  /** [[containmentPairs]] over an already-built shingle table `sh`
+    * (doc_id, sh) and its [[containmentShingleStats]] `stats`.
+    */
+  private[graft] def containmentPairsOf(sh: DataFrame, stats: DataFrame,
+      maxPosting: Int): DataFrame = {
+    val posts = containmentPostings(sh)
+    containmentVerify(sh,
+      containmentCandidates(Seq(containmentPrefixRows(sh, stats) -> posts),
+        posts, stats.filter(col("df") > maxPosting)),
+      pruneCorpus = false)
+  }
+
+  /** Posting rows (doc_id, nsh, g) of a shingle table: one row per
+    * (doc, shingle), carrying the doc's shingle count for the length
+    * filter.
+    */
+  private[graft] def containmentPostings(sh: DataFrame): DataFrame =
+    sh.select(col("doc_id"), size(col("sh")).as("nsh"),
       explode(col("sh")).as("g"))
-    // min over (doc_id, nsh) structs orders by doc_id first: the
-    // representative is the posting's minimum id, its nsh riding
-    // along for the star tier's length filters.
-    val dfTab = posts.groupBy(col("g")).agg(count(lit(1)).as("df"),
+
+  /** Per-shingle (g, df, rep) over posting rows: the document
+    * frequency and the min-id posting as the star representative. min
+    * over (doc_id, nsh) structs orders by doc_id first, so `rep.nsh`
+    * rides along for the star tier's length filter.
+    */
+  private[graft] def containmentShingleStats(posts: DataFrame): DataFrame =
+    posts.groupBy(col("g")).agg(count(lit(1)).as("df"),
       min(struct(col("doc_id"), col("nsh"))).as("rep"))
-    // Join strategies are pinned scale-invariant: post-explode size
-    // estimates undershoot (the 0.6 MB sf0.1 parquet footprint made
-    // the planner BROADCAST the exploded posting table and the full
-    // shingle-array table — four corpus-sized broadcast builds per
-    // execution, the entry's driver-context sensitivity), and at
-    // 100 TB none of these sides fits a broadcast anyway. The only
-    // broadcast left is the df>cap hot set, bounded by construction
-    // at |corpus|/maxPosting representatives.
-    val prefix = posts
-      .join(dfTab.select(col("g"), col("df")).hint("shuffle_hash"), Seq("g"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("doc_id")).orderBy(col("df"), col("g"))))
-      .filter(col("rk") <= floor(col("nsh") / 5) + 1 &&
-        col("df") <= maxPosting)
-      .select(col("doc_id").as("a"), col("nsh").as("nsha"), col("g"))
-    // PPJoin length filter: C(a->b) >= 4/5 forces 5|sh(b)| >= 4|sh(a)|
-    // in exact integer math (a float ceil(0.8n) overshoots by 1 ulp
-    // at n%5==0 and would prune true boundary pairs).
-    val coldCand = prefix.hint("shuffle_hash")
-      .join(posts.select(col("doc_id").as("b"), col("nsh").as("nshb"), col("g")),
-        Seq("g"))
-      .filter(col("a") =!= col("b") && col("nshb") * 5 >= col("nsha") * 4)
-      .select(col("a"), col("b"))
-    // Star tier: one MAP-ONLY pass (posts against the broadcast hot
-    // set — empty on organic corpora) emitting BOTH orientations from
-    // a single consumer via explode. Earlier cuts of this defense
-    // that routed the cold b-side or a fwd/rev union through shared
-    // join frames re-evaluated the shingle-explode lineage or the
-    // prefix rank window per consumer — measured 2-4x the whole entry
-    // at sf0.1; with sh persisted the probe re-aggregates from the
-    // cache instead of re-shingling the corpus.
-    val idT = sh.schema("doc_id").dataType.catalogString
+
+  /** Candidate pairs (a, b), deduplicated, of the [[containmentPairs]]
+    * core:
+    *   - cold tier, one per `(prefix, posts)` element: prefix rows
+    *     (a, nsha, g) minus currently-hot shingles (broadcast anti
+    *     join), shuffle-hash-joined on g against posting rows
+    *     (doc_id, nsh, g), length-filtered;
+    *   - star tier: `starPosts` members of each hot shingle in
+    *     `hotTab` (g, df, rep) paired with the representative, both
+    *     orientations, map-only against the broadcast hot table.
+    * `hotTab` must be exact for every shingle the tiers route on.
+    */
+  private[graft] def containmentCandidates(
+      cold: Seq[(DataFrame, DataFrame)], starPosts: DataFrame,
+      hotTab: DataFrame): DataFrame = {
+    val hotG = broadcast(hotTab.select(col("g")))
+    val coldPairs = cold.map { case (prefix, posts) =>
+      prefix.join(hotG, Seq("g"), "left_anti")
+        .hint("shuffle_hash")
+        .join(posts.select(col("doc_id").as("b"), col("nsh").as("nshb"),
+          col("g")), Seq("g"))
+        .filter(col("a") =!= col("b") && col("nshb") * 5 >= col("nsha") * 4)
+        .select(col("a"), col("b"))
+    }
+    // One map-only pass emitting both orientations through one explode:
+    // routing them through a fwd/rev union of shared join frames
+    // re-evaluated the posting lineage per consumer — measured 2-4x the
+    // whole batch entry at sf0.1.
+    val idT = starPosts.schema("doc_id").dataType.catalogString
     val pairT = s"array<struct<a:$idT,b:$idT>>"
-    val hotMembers = posts
-      .join(broadcast(dfTab.filter(col("df") > maxPosting)), Seq("g"))
+    val stars = observeStarPairs(starPosts
+      .join(broadcast(hotTab), Seq("g"))
       .filter(col("doc_id") =!= col("rep.doc_id"))
-    val stars = hotMembers.select(explode(concat(
-        // orientation 1: rep contained in member (a=rep, b=member)
+      .select(explode(concat(
+        // rep contained in member (a = rep, b = member)
         when(col("nsh") * 5 >= col("rep.nsh") * 4,
           array(struct(col("rep.doc_id").as("a"), col("doc_id").as("b"))))
           .otherwise(array().cast(pairT)),
-        // orientation 2: member contained in rep (a=member, b=rep)
+        // member contained in rep (a = member, b = rep)
         when(col("rep.nsh") * 5 >= col("nsh") * 4,
           array(struct(col("doc_id").as("a"), col("rep.doc_id").as("b"))))
           .otherwise(array().cast(pairT)))).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"))
-    // The star branch carries an always-on observed metric: zero rows
-    // on organic corpora, and any nonzero count is the signal that
-    // the output is star-linked rather than complete above the df cap
-    // (the audit detail lives in [[hotPostingReport]]). observe() is
-    // computed inline during the action — no extra job — and a
-    // session-level listener logs it so a degraded production corpus
-    // is visible without the consumer asking.
-    val observedStars = observeStarPairs(stars)
-    val cand = coldCand.unionByName(observedStars).distinct()
-    // Verify joins are doc-id equi-joins where BOTH sides are
-    // contractually unbounded (cand is quadratic on degenerate
-    // corpora, sh is the corpus): sort-merge, never a broadcast of
-    // the shingle table.
-    cand.hint("merge")
-      .join(sh.select(col("doc_id").as("a"), col("sh").as("sha")), Seq("a"))
-      .hint("merge") // a hint is consumed by ONE join: re-pin for the b side
-      .join(sh.select(col("doc_id").as("b"), col("sh").as("shb")), Seq("b"))
+      .select(col("p.a").as("a"), col("p.b").as("b")))
+    (coldPairs :+ stars).reduce(_.unionByName(_)).distinct()
+  }
+
+  /** Exact verify of [[containmentPairs]]' candidates: look up both
+    * endpoints' shingle sets in `sh` (doc_id, sh) and keep pairs with
+    * containment >= 0.8, as (a, b, na, inter, containment).
+    *
+    * Each candidate is melted into its two endpoints, joined to `sh`
+    * ONCE on doc_id (merge-pinned: both sides are contractually
+    * unbounded, and the shingle table is never broadcast), and
+    * reassembled per pair. Two doc-id joins, one per endpoint, cost
+    * 9.5 of 10.5 s of a 500k-doc streaming batch (Spark does not reuse
+    * the exchange across differently-aliased sides). Each (a, b) group
+    * holds one side=a and one side=b row when doc ids are unique, so
+    * the ignoreNulls-first picks are deterministic.
+    *
+    * `pruneCorpus`: when the caller has counted the candidates and they
+    * are broadcast-safe, `sh` is first semi-pruned by the distinct
+    * endpoint ids, so only candidate-matched rows reach the merge
+    * join's shuffle + sort (at the 500k-doc streaming tier the unpruned
+    * sort moved the whole store's shingle arrays every batch). Only
+    * the bounded endpoint aggregate is ever broadcast.
+    */
+  private[graft] def containmentVerify(sh: DataFrame, cand: DataFrame,
+      pruneCorpus: Boolean): DataFrame = {
+    import graft.functions.VectorExpressions.sorted_intersect_size
+    val corpus =
+      if (!pruneCorpus) sh
+      else sh.join(
+        broadcast(cand.select(explode(array(col("a"), col("b")))
+          .as("doc_id")).distinct()),
+        Seq("doc_id"), "left_semi")
+    val melted = cand.select(col("a"), col("b"), explode(array(
+        struct(lit("a").as("side"), col("a").as("doc_id")),
+        struct(lit("b").as("side"), col("b").as("doc_id")))).as("m"))
+      .select(col("a"), col("b"), col("m.side").as("side"),
+        col("m.doc_id").as("doc_id"))
+    melted.hint("merge")
+      .join(corpus, Seq("doc_id"))
+      .groupBy(col("a"), col("b"))
+      .agg(
+        first(when(col("side") === "a", col("sh")), ignoreNulls = true)
+          .as("sha"),
+        first(when(col("side") === "b", col("sh")), ignoreNulls = true)
+          .as("shb"))
       .select(col("a"), col("b"),
         sorted_intersect_size(col("sha"), col("shb")).cast("long").as("inter"),
         size(col("sha")).cast("long").as("na"))
@@ -757,7 +811,7 @@ object Dedup {
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, java.lang.Boolean]())
 
-  /** Wrap the star-tier branch of [[containmentPairs]] in a named
+  /** Wrap the star tier of [[containmentCandidates]] in a named
     * `observe` (unique per call — CollectMetrics names must not
     * collide inside one query) and register, once per session, a
     * QueryExecutionListener that WARN-logs whenever the metric is
@@ -800,21 +854,15 @@ object Dedup {
   }
 
   /** The floor(|sh|/5)+1-shingle PREFIX rows (a, nsha, g) for each doc
-    * in `sh`, rarest-first by the supplied (g, df) snapshot — the
-    * index side of [[containmentPairs]]'s PPJoin filter, factored out
-    * so the STREAMING shape can persist it: by the pigeonhole argument
-    * in [[containmentPairs]]'s scaladoc, ANY floor(n/5)+1-subset of
-    * a's shingles is lossless for the C >= 0.8 filter, so a prefix
-    * ranked against an OLDER df snapshot stays complete as the corpus
-    * grows — df-rarest ranking only minimizes join fan-out, never
-    * correctness. Shingles absent from the snapshot rank as df=0
-    * (rarest), which is exact for a snapshot covering the whole corpus
-    * at build time.
+    * in `sh`, rarest-first by the supplied (g, df) snapshot: the index
+    * side of the [[containmentPairs]] core. Any such subset is
+    * lossless (the pigeonhole bound), so streaming stores persist
+    * these rows and reuse them as the corpus grows. Shingles absent
+    * from the snapshot rank as df=0 (rarest).
     */
   private[graft] def containmentPrefixRows(sh: DataFrame,
       dfByG: DataFrame): DataFrame =
-    sh.select(col("doc_id"), size(col("sh")).as("nsh"),
-        explode(col("sh")).as("g"))
+    containmentPostings(sh)
       .join(dfByG.select(col("g"), col("df")).hint("shuffle_hash"),
         Seq("g"), "left")
       .withColumn("rk", row_number().over(

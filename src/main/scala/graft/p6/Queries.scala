@@ -3447,9 +3447,9 @@ object Queries {
     annRecallSummary(exactTop10(s, dir), ann, k = 10, minHits = 7)
   }
 
-  /** WARM-path BATCH IVF ANN — the amortized production shape the r12
-    * AnnProbe measured for: at sf10 the cold batch entry's dominant
-    * term is the 2-iteration k-means refine (~8.8 s of 12.4 s operator
+  /** WARM-path BATCH IVF ANN — the amortized production shape: at
+    * sf10 the cold batch entry's dominant term is the 2-iteration
+    * k-means refine (~8.8 s of 12.4 s operator
     * wall; BASELINE.md round 12), work a similarity service pays ONCE
     * per corpus, not per batch. The TRAINED index (k-means centroids +
     * assignment, same nlist=32 / refineIters=2 as the cold entry) is a

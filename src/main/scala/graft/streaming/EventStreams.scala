@@ -563,82 +563,78 @@ object EventStreams {
 
   /** Seed the persisted incremental-CONTAINMENT store: the base
     * corpus's sorted shingle sets land under `docs/batch=base`, its
-    * PPJoin prefix rows (the floor(n/5)+1 rarest shingles per doc —
-    * lossless for ANY subset choice, see
-    * [[graft.operators.Dedup.containmentPrefixRows]]) under
+    * PPJoin prefix rows (the floor(n/5)+1 rarest shingles per doc,
+    * see [[graft.operators.Dedup.containmentPrefixRows]]) under
     * `prefix/batch=base`, and (unless `minePairs = false`) the base
-    * corpus's own containment pairs — mined once with the batch
-    * operator — under `pairs/batch=base`. The persisted prefix is
-    * what makes increments cheap: each micro-batch joins the STORED
-    * index rows against its own postings instead of re-ranking every
-    * store doc's shingles per batch.
+    * corpus's own containment pairs, mined by the batch operator's
+    * core over the same shingle table and df aggregate, under
+    * `pairs/batch=base`. The persisted prefix is what makes
+    * increments cheap: each micro-batch joins the STORED index rows
+    * against its own postings instead of re-ranking every store doc's
+    * shingles per batch.
     *
     * `postings/batch=base` holds the base's PRE-EXPLODED posting rows
-    * (g, doc_id, nsh), range-partitioned and sorted by g (r17 VERDICT
-    * #3): each micro-batch's store-side prune reads this flat sub
-    * instead of re-exploding every store doc's shingle array — at the
-    * 500k-doc tier the re-explode was 4.2 s of an 8.7 s batch.
-    * Store parameters persist to `containment-meta.txt`
-    * ([[containmentMeta]]) so compactions resolve the stream's
-    * maxPosting instead of trusting a caller default.
+    * (g, doc_id, nsh), range-partitioned and sorted by g: each
+    * micro-batch's store-side prune reads this flat sub instead of
+    * re-exploding every store doc's shingle array — at the 500k-doc
+    * tier the re-explode was 4.2 s of an 8.7 s batch. Store parameters
+    * persist to `containment-meta.txt` ([[containmentMeta]]) so
+    * compactions resolve the stream's maxPosting instead of trusting a
+    * caller default.
     *
     * Two more TINY subs carry the cross-batch bookkeeping that keeps
-    * each increment's cost bounded by the batch, not the store (r16
-    * VERDICT #3/#4):
+    * each increment's cost bounded by the batch, not the store:
     *   - `hot/batch=base` — the CUMULATIVE hot-shingle set (df >
     *     maxPosting). Exact by construction and monotone forever
     *     after: df only grows, and a shingle can only cross the cap
     *     in a batch that contains it, so each batch appends exactly
     *     its newly-hot shingles.
     *   - `stale/batch=base` — store docs whose STORED prefix lost a
-    *     row to a shingle that went hot after ingestion (the r15
-    *     ADVICE soundness case). Empty at seed by construction: seed
-    *     prefixes are ranked against the seed df, so already-hot
-    *     shingles rank LAST and displace no cold row.
+    *     row to a shingle that went hot after ingestion. Empty at seed
+    *     by construction: seed prefixes are ranked against the seed
+    *     df, so already-hot shingles rank LAST and displace no cold
+    *     row.
     */
   def seedContainmentBase(base: DataFrame, idCol: String, textCol: String,
       storeDir: String, shingleLen: Int = 3, minShingles: Int = 5,
       maxPosting: Int = graft.operators.Dedup.DefaultMaxPosting,
       minePairs: Boolean = true): Unit = {
     import graft.operators.Dedup
+    val MAD = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val sh = Dedup.containmentShingles(base, idCol, textCol,
-        shingleLen, minShingles)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        shingleLen, minShingles).persist(MAD)
     try {
       sh.write.mode("overwrite").parquet(s"$storeDir/docs/batch=base")
       containmentPostingsOf(sh, sorted = true)
         .write.mode("overwrite").parquet(s"$storeDir/postings/batch=base")
-      val dfByG = sh.select(explode(col("sh")).as("g"))
-        .groupBy(col("g")).agg(count(lit(1)).as("df"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val stats = Dedup.containmentShingleStats(Dedup.containmentPostings(sh))
+        .persist(MAD)
       try {
-        Dedup.containmentPrefixRows(sh, dfByG)
+        Dedup.containmentPrefixRows(sh, stats)
           .write.mode("overwrite").parquet(s"$storeDir/prefix/batch=base")
-        dfByG.filter(col("df") > maxPosting).select(col("g"))
+        stats.filter(col("df") > maxPosting).select(col("g"))
           .write.mode("overwrite").parquet(s"$storeDir/hot/batch=base")
         sh.select(col("doc_id")).limit(0)
           .write.mode("overwrite").parquet(s"$storeDir/stale/batch=base")
-      } finally { dfByG.unpersist(false); () }
-      if (minePairs)
-        Dedup.containmentPairs(base, idCol, textCol, shingleLen,
-            minShingles, maxPosting)
-          .write.mode("overwrite").parquet(s"$storeDir/pairs/batch=base")
+        if (minePairs)
+          Dedup.containmentPairsOf(sh, stats, maxPosting)
+            .write.mode("overwrite").parquet(s"$storeDir/pairs/batch=base")
+      } finally { stats.unpersist(false); () }
       writeContainmentMeta(base.sparkSession, storeDir, maxPosting)
     } finally { sh.unpersist(false); () }
   }
 
   /** The pre-exploded posting rows (g, doc_id, nsh) of a shingle-set
-    * df — the `postings` store sub's row shape (r17 VERDICT #3). With
-    * `sorted` (seed bases and major folds), rows are range-partitioned
-    * and sorted by g so each parquet file covers a narrow g range and
-    * row-group min/max stats carry real pruning power for g-bounded
-    * readers; per-batch deltas sort locally only (batch-sized files —
-    * a range shuffle would cost more than it prunes).
+    * df — the `postings` store sub's row shape. With `sorted` (seed
+    * bases and major folds), rows are range-partitioned and sorted by
+    * g so each parquet file covers a narrow g range and row-group
+    * min/max stats carry real pruning power for g-bounded readers;
+    * per-batch deltas sort locally only (batch-sized files — a range
+    * shuffle would cost more than it prunes).
     */
-  private def containmentPostingsOf(sh: DataFrame,
+  private[graft] def containmentPostingsOf(sh: DataFrame,
       sorted: Boolean): DataFrame = {
-    val posts = sh.select(col("doc_id"), size(col("sh")).as("nsh"),
-        explode(col("sh")).as("g"))
+    val posts = graft.operators.Dedup.containmentPostings(sh)
       .select(col("g"), col("doc_id"), col("nsh"))
     if (sorted) posts.repartitionByRange(col("g")).sortWithinPartitions("g")
     else posts.sortWithinPartitions("g")
@@ -759,41 +755,40 @@ object EventStreams {
   /** One micro-batch of [[streamingContainment]]: mine every
     * containment pair TOUCHING the new docs — a in new vs anyone
     * (both directions of the prefix join), a in store vs b in new via
-    * the PERSISTED prefix index — then append the batch's shingles,
-    * prefix rows, newly-hot shingles and newly-stale doc ids to the
-    * store. Idempotent under replay exactly as
-    * [[dedupIncrementBatch]]: deterministic per-batch partition dirs,
-    * overwrite mode, every base read excludes the current batch id.
+    * the PERSISTED prefix index — with the candidate-and-verify core
+    * of [[graft.operators.Dedup.containmentPairs]], then append the
+    * batch's shingles, postings, prefix rows, newly-hot shingles and
+    * newly-stale doc ids to the store. Idempotent under replay exactly
+    * as [[dedupIncrementBatch]]: deterministic per-batch partition
+    * dirs, overwrite mode, every base read excludes the current batch
+    * id. Doc ids must be unique across the store and the batch (the
+    * core's verify precondition).
     *
-    * COST SHAPE (r16 VERDICT #3, r17 VERDICT #3 — the former
-    * O(store)-postings shuffle + O(store) cache materialization per
-    * batch is gone, and so is the per-batch re-explode of every store
-    * doc's shingle array): everything keyed is bounded by the BATCH,
-    * not the store. The store contributes per batch only map-side
-    * columnar scans — the PERSISTED `postings` sub (g, doc_id, nsh;
-    * written pre-exploded at seed/ingest, g-sorted in consolidated
-    * generations) semi-pruned against this batch's distinct shingles
-    * (a shingle can only form a pair with a batch doc if the batch
-    * contains it), the prefix sub semi-pruned the same way, and the
-    * tiny hot/stale subs. Shuffled volume is O(postings matching the
-    * batch's shingles), so per-batch time grows with scan bandwidth,
-    * not with store-sized shuffles — ContainmentStreamGate's chain
-    * mode pins the 1x-vs-10x-store ratio. HONEST LIMITS of the scan
-    * terms that remain linear in store size: (1) the postings semi
-    * join still scans every row group whose g range can match the
-    * batch — with hashed shingles the batch's g set spans the space,
-    * so in practice the whole flat (g, doc_id, nsh) sub is read each
-    * batch, just without array decode or a Generate; (2) the verify
-    * tail reads the docs sub once to look up candidate endpoints'
-    * shingle sets. Both are flat columnar reads at scan bandwidth; at
-    * a store size where even that dominates, the lever is compaction
-    * cadence + a coarse g-bucketing of the postings generation, not
-    * this operator. The batch's distinct-shingle set is the one
-    * broadcast of corpus-derived data; it is bounded by the
-    * micro-batch (the trigger interval / source rate limit controls
-    * it), and past [[MaxBroadcastShingles]] the prune degrades
-    * gracefully to a shuffle-hash semi join instead of risking the
-    * driver.
+    * COST SHAPE: everything keyed is bounded by the BATCH, not the
+    * store. The store contributes per batch only map-side columnar
+    * scans — the persisted `postings` sub (g, doc_id, nsh; g-sorted in
+    * consolidated generations) semi-pruned against this batch's
+    * distinct shingles (a shingle can only form a pair with a batch
+    * doc if the batch contains it), the prefix sub semi-pruned the
+    * same way, and the tiny hot/stale subs. Shuffled volume is
+    * O(postings matching the batch's shingles), so per-batch time
+    * grows with scan bandwidth, not with store-sized shuffles —
+    * ContainmentStreamGate's chain mode pins the 1x-vs-10x-store
+    * ratio. HONEST LIMITS of the scan terms that remain linear in
+    * store size: (1) the postings semi join still scans every row
+    * group whose g range can match the batch — with hashed shingles
+    * the batch's g set spans the space, so in practice the whole flat
+    * (g, doc_id, nsh) sub is read each batch, just without array
+    * decode or a Generate; (2) the verify reads the docs sub once to
+    * look up candidate endpoints' shingle sets. Both are flat columnar
+    * reads at scan bandwidth; at a store size where even that
+    * dominates, the lever is compaction cadence + a coarse g-bucketing
+    * of the postings generation, not this operator. The batch's
+    * distinct-shingle set is the one broadcast of corpus-derived
+    * data; it is bounded by the micro-batch (the trigger interval /
+    * source rate limit controls it), and past [[MaxBroadcastShingles]]
+    * the prune degrades to a shuffle-hash semi join instead of
+    * risking the driver.
     *
     * EXACTNESS of the pruned df: the pruned postings still contain
     * EVERY store posting of each batch shingle, so per-shingle totals
@@ -836,8 +831,7 @@ object EventStreams {
         shingleLen, minShingles).persist(MAD)
     val storeSh = DedupStore.readLive(spark, storeDir, "docs")
       .filter(col("batch") =!= part).select(col("doc_id"), col("sh"))
-    val postsNew = newSh.select(col("doc_id"), size(col("sh")).as("nsh"),
-      explode(col("sh")).as("g"))
+    val postsNew = Dedup.containmentPostings(newSh)
     val newG = postsNew.select(col("g")).distinct()
     // Batch-shingle prune, broadcast up to MaxBroadcastShingles (the
     // count is a batch-bounded job over the persisted newSh), else the
@@ -849,10 +843,10 @@ object EventStreams {
         _.join(newG.hint("shuffle_hash"), Seq("g"), "left_semi")
     // Store postings pruned MAP-SIDE to the batch's shingles: read
     // from the persisted pre-exploded `postings` sub (no per-batch
-    // array decode or Generate over the store — r17 VERDICT #3), the
-    // semi drops every posting that cannot touch this batch, and only
-    // the survivors (all store postings of the batch's shingles — the
-    // exactness contract above) are ever shuffled or cached.
+    // array decode or Generate over the store), the semi drops every
+    // posting that cannot touch this batch, and only the survivors
+    // (all store postings of the batch's shingles — the exactness
+    // contract above) are ever shuffled or cached.
     val postsStore = pruneToBatch(
         DedupStore.readLive(spark, storeDir, "postings")
           .filter(col("batch") =!= part)
@@ -861,9 +855,7 @@ object EventStreams {
     // Exact per-shingle totals + min-id representatives for every
     // shingle in the batch (the only shingles any of this batch's
     // tiers can route on).
-    val aggAll = postsStore.unionByName(postsNew)
-      .groupBy(col("g")).agg(count(lit(1)).as("df"),
-        min(struct(col("doc_id"), col("nsh"))).as("rep"))
+    val aggAll = Dedup.containmentShingleStats(postsStore.unionByName(postsNew))
       .persist(MAD)
     try {
       val hotTab = aggAll.filter(col("df") > maxPosting)
@@ -879,20 +871,19 @@ object EventStreams {
             .filter(col("batch") =!= part)
             .select(col("a"), col("nsha"), col("g")))
         .persist(MAD)
-      // STALE-PREFIX bookkeeping (r15 ADVICE fix, r16 VERDICT #4): a
-      // stored prefix row whose shingle crossed df > maxPosting AFTER
-      // its ranking leaves the cold join for the star tier, and the
-      // doc's surviving cold prefix can fall below the lossless
-      // floor(n/5)+1 bound — a (store, new) pair sharing only cold
-      // shingles outside the reduced prefix would be silently missed.
-      // Displacement can only be CAUSED by a shingle in the batch that
-      // made it hot (prefixes written later rank it last), so the
-      // probe runs ONLY when this batch made something newly hot —
-      // organic batches (empty hot delta) touch no prefix row for it —
-      // and its hits are PERSISTED to the `stale` sub so later batches
-      // read the tiny cumulative list instead of re-probing. A MAJOR
-      // containmentCompact re-ranks the folded prefix generation and
-      // resets the list.
+      // STALE-PREFIX bookkeeping: a stored prefix row whose shingle
+      // crossed df > maxPosting AFTER its ranking leaves the cold join
+      // for the star tier, and the doc's surviving cold prefix can
+      // fall below the lossless floor(n/5)+1 bound — a (store, new)
+      // pair sharing only cold shingles outside the reduced prefix
+      // would be silently missed. Displacement can only be CAUSED by a
+      // shingle in the batch that made it hot (prefixes written later
+      // rank it last), so the probe runs ONLY when this batch made
+      // something newly hot — organic batches (empty hot delta) touch
+      // no prefix row for it — and its hits are PERSISTED to the
+      // `stale` sub so later batches read the tiny cumulative list
+      // instead of re-probing. A MAJOR containmentCompact re-ranks the
+      // folded prefix generation and resets the list.
       val staleDelta =
         (if (newlyHot.isEmpty)
           storePrefix.select(col("a").as("doc_id")).limit(0)
@@ -915,14 +906,12 @@ object EventStreams {
       // keeps the refresh free of any store-sized aggregate; extra
       // candidates are verified away.
       //
-      // The stale-doc semi join follows the counted-broadcast pattern
-      // (r18 — the 5M-doc planted gate showed the shuffle_hash shape
-      // re-shuffling the whole docs sub whenever the probe fires,
-      // 182.9 s vs 64.6 s organic): the stale list is counted once
-      // (it is persisted and reused), broadcast when bounded, with
-      // the shuffle-hash fallback for the contractually-unbounded
-      // degenerate corpus — the corpus side is never the build side
-      // either way.
+      // The stale list is counted once (it is persisted and reused)
+      // and broadcast into the semi join when bounded: on the 5M-doc
+      // planted gate a shuffle-hash semi re-shuffled the whole docs sub
+      // whenever the probe fired (182.9 s vs 64.6 s organic). The
+      // shuffle-hash fallback covers the contractually-unbounded
+      // degenerate corpus; the corpus side is never the build side.
       val nStale = staleAll.count()
       val refreshedPrefix =
         if (nStale == 0L) None
@@ -939,16 +928,19 @@ object EventStreams {
       val prefixNew = Dedup.containmentPrefixRows(newSh,
           aggAll.select(col("g"), col("df")))
         .persist(MAD)
+      val storeSide = refreshedPrefix.fold(storePrefix)(storePrefix.unionByName(_))
       // Candidates persisted + counted ONCE: the count both feeds the
       // verify (reuse instead of recomputing the candidate joins) and
       // decides its corpus-prune shape — 2 endpoints per candidate,
       // same broadcast ceiling as the shingle prune. Past the ceiling
-      // the verify falls back to the unpruned store-sized merge sort,
-      // the graceful pre-r18 shape.
-      val cand = containmentCandidates(newSh, storePrefix, prefixNew,
-          postsStore, hotTab, refreshedPrefix).persist(MAD)
+      // the verify falls back to the unpruned store-sized merge sort.
+      val cand = Dedup.containmentCandidates(
+          Seq(prefixNew -> postsStore.unionByName(postsNew), // a in NEW vs anyone
+            storeSide -> postsNew),                          // a in STORE vs NEW
+          postsNew, hotTab)
+        .persist(MAD)
       try {
-        containmentVerify(storeSh.unionByName(newSh), cand,
+        Dedup.containmentVerify(storeSh.unionByName(newSh), cand,
             pruneCorpus = 2L * cand.count() <= MaxBroadcastShingles)
           .write.mode("overwrite").parquet(s"$storeDir/pairs/batch=$part")
         newSh.write.mode("overwrite").parquet(s"$storeDir/docs/batch=$part")
@@ -966,144 +958,6 @@ object EventStreams {
       aggAll.unpersist(false); postsStore.unpersist(false)
       newSh.unpersist(false); ()
     }
-  }
-
-  /** The pure per-batch pair-mining PLAN of [[containmentIncrementBatch]]
-    * (factored out so PlanSpec can pin its scale shape): cold tier =
-    * prefix rows with currently-hot shingles dropped by a broadcast
-    * anti join, shuffle-hash-joined against batch-pruned postings
-    * (a in NEW vs anyone; a in STORE via the persisted prefix vs NEW);
-    * star tier = NEW members of hot shingles vs the current min-id
-    * representative against the broadcast hot table; verify =
-    * sort-merge joins on doc ids (both sides contractually unbounded).
-    * Every broadcast build is a bounded aggregate (the hot set, or
-    * batch-derived distincts built by the caller); no store-sized side
-    * is ever shuffled by more than its batch-matching postings. Same
-    * output columns as [[graft.operators.Dedup.containmentPairs]].
-    *
-    * Input contracts (the caller — [[containmentIncrementBatch]] —
-    * establishes them): `postsStore` holds EVERY store posting whose
-    * shingle occurs in the batch and nothing else; `hotTab` is
-    * (g, df, rep) EXACTLY for the hot shingles among the batch's
-    * (exact totals over store + batch); `storePrefix` is the stored
-    * prefix pruned to batch shingles, plus — via `refreshedPrefix` —
-    * re-ranked rows for docs whose stored prefix lost rows to the
-    * hot cap (a superset of the stored rows, so candidates only grow
-    * and verify keeps the output exact).
-    */
-  private[graft] def containmentIncrementPairs(shAll: DataFrame,
-      newSh: DataFrame, storePrefix: DataFrame, prefixNew: DataFrame,
-      postsStore: DataFrame, hotTab: DataFrame,
-      refreshedPrefix: Option[DataFrame] = None): DataFrame =
-    containmentVerify(shAll,
-      containmentCandidates(newSh, storePrefix, prefixNew, postsStore,
-        hotTab, refreshedPrefix),
-      pruneCorpus = false)
-
-  /** The candidate tiers of [[containmentIncrementPairs]]: cold
-    * (prefix-filter) + star (hot representatives), deduplicated.
-    * Factored out so [[containmentIncrementBatch]] can persist + count
-    * the candidates once and pick the verify's corpus-prune shape from
-    * the real size instead of a static guess.
-    */
-  private[graft] def containmentCandidates(
-      newSh: DataFrame, storePrefix: DataFrame, prefixNew: DataFrame,
-      postsStore: DataFrame, hotTab: DataFrame,
-      refreshedPrefix: Option[DataFrame] = None): DataFrame = {
-    import graft.operators.Dedup
-    val postsNew = newSh.select(col("doc_id"), size(col("sh")).as("nsh"),
-      explode(col("sh")).as("g"))
-    val hotG = hotTab.select(col("g"))
-    // Cold tier: currently-hot shingles leave the equi-join for the
-    // star tier (same trade as batch). Hotness-by-anti-join against
-    // the exact hot set replaces the old per-row df filter — no
-    // store-wide df aggregate needed. Every shingle reaching either
-    // join is a batch shingle, where hotTab is exact.
-    def cold(pref: DataFrame, postsB: DataFrame) = pref
-      .join(broadcast(hotG), Seq("g"), "left_anti")
-      .hint("shuffle_hash")
-      .join(postsB.select(col("doc_id").as("b"), col("nsh").as("nshb"),
-        col("g")), Seq("g"))
-      .filter(col("a") =!= col("b") && col("nshb") * 5 >= col("nsha") * 4)
-      .select(col("a"), col("b"))
-    val storeSide = refreshedPrefix
-      .fold(storePrefix)(storePrefix.unionByName(_))
-    val coldCand = cold(prefixNew, postsStore.unionByName(postsNew)) // a in NEW vs anyone
-      .unionByName(cold(storeSide, postsNew))                        // a in STORE vs NEW
-    // Star tier: NEW members of hot shingles vs the current min-id
-    // representative, both orientations, map-only against the
-    // bounded broadcast hot table — the batch operator's construction
-    // restricted to this batch's postings.
-    val idT = newSh.schema("doc_id").dataType.catalogString
-    val pairT = s"array<struct<a:$idT,b:$idT>>"
-    val hotNewMembers = postsNew
-      .join(broadcast(hotTab), Seq("g"))
-      .filter(col("doc_id") =!= col("rep.doc_id"))
-    val stars = Dedup.observeStarPairs(hotNewMembers.select(explode(concat(
-        when(col("nsh") * 5 >= col("rep.nsh") * 4,
-          array(struct(col("rep.doc_id").as("a"), col("doc_id").as("b"))))
-          .otherwise(array().cast(pairT)),
-        when(col("rep.nsh") * 5 >= col("nsh") * 4,
-          array(struct(col("doc_id").as("a"), col("rep.doc_id").as("b"))))
-          .otherwise(array().cast(pairT)))).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b")))
-    coldCand.unionByName(stars).distinct()
-  }
-
-  /** The verify tail of [[containmentIncrementPairs]]: look up each
-    * candidate endpoint's shingle set corpus-wide and keep pairs with
-    * containment >= 0.8.
-    *
-    * ONE-PASS shape: candidate store endpoints are arbitrary doc ids,
-    * so their shingle sets must be looked up in the docs sub — this is
-    * the ONE per-batch stage that still touches the store's docs
-    * corpus, and it dominated the residual cost when it ran as TWO
-    * doc-id joins (r17 probe at the 500k tier: 9.5 of 10.5 s; Spark
-    * does not ReuseExchange across the differently-aliased sides).
-    * Melt each candidate into its two endpoints, join the corpus ONCE,
-    * and reassemble per pair. Each (a, b) group holds exactly one
-    * side=a and one side=b row (doc ids are unique per the stream
-    * contract), so the ignoreNulls-first picks are deterministic.
-    *
-    * `pruneCorpus` (r18): when the CALLER has counted the candidates
-    * and they are broadcast-safe, the corpus side is first semi-pruned
-    * by the distinct endpoint ids — the docs sub is still SCANNED
-    * map-side, but only candidate-matched rows (batch-coupled, not
-    * store-sized) reach the merge join's shuffle+sort, which was the
-    * last store-sized shuffle in the batch (at the 500k tier the
-    * unpruned sort moved the whole corpus's shingle arrays every
-    * batch). With it off, both sides stay contractually unbounded and
-    * the join is merge-pinned — the corpus is NEVER broadcast either
-    * way (the r14 lesson); only the bounded endpoint aggregate is.
-    */
-  private[graft] def containmentVerify(shAll: DataFrame, cand: DataFrame,
-      pruneCorpus: Boolean): DataFrame = {
-    import graft.functions.VectorExpressions.sorted_intersect_size
-    val corpus =
-      if (!pruneCorpus) shAll
-      else shAll.join(
-        broadcast(cand.select(explode(array(col("a"), col("b")))
-          .as("doc_id")).distinct()),
-        Seq("doc_id"), "left_semi")
-    val melted = cand.select(col("a"), col("b"), explode(array(
-        struct(lit("a").as("side"), col("a").as("doc_id")),
-        struct(lit("b").as("side"), col("b").as("doc_id")))).as("m"))
-      .select(col("a"), col("b"), col("m.side").as("side"),
-        col("m.doc_id").as("doc_id"))
-    melted.hint("merge")
-      .join(corpus, Seq("doc_id"))
-      .groupBy(col("a"), col("b"))
-      .agg(
-        first(when(col("side") === "a", col("sh")), ignoreNulls = true)
-          .as("sha"),
-        first(when(col("side") === "b", col("sh")), ignoreNulls = true)
-          .as("shb"))
-      .select(col("a"), col("b"),
-        sorted_intersect_size(col("sha"), col("shb")).cast("long").as("inter"),
-        size(col("sha")).cast("long").as("na"))
-      .filter(col("inter") / col("na") >= 0.8)
-      .select(col("a"), col("b"), col("na"), col("inter"),
-        (col("inter") / col("na")).as("containment"))
   }
 
   /** CONTINUOUS incremental containment mining — the Structured

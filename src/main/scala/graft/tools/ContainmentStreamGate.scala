@@ -8,8 +8,7 @@ import org.apache.spark.sql.functions._
   * and four increments, drive [[graft.streaming.EventStreams
   * .containmentIncrementBatch]] exactly as foreachBatch would — WITH
   * one minor and one major store fold (docs+prefix+pairs) mid-stream
-  * (r15 VERDICT #5: the previous gate never folded the store; the
-  * compaction cases were toy-scale only) — and assert the accumulated
+  * — and assert the accumulated
   * pair log is BYTE-IDENTICAL (as an (a,b,na,inter) set) to the batch
   * operator run once over the full corpus, and that the folds really
   * rewrote the live layout. Prints one JSON line for BASELINE.md /
@@ -22,19 +21,22 @@ import org.apache.spark.sql.functions._
   * timed on ONE additional containmentIncrementBatch, at the sfDir
   * base size and id-shift replications of it (default tiers 1,10:
   * sf1 -> 50k and 500k docs; pass a third arg like `1,10,100` for
-  * the 5M-doc decade — r17 VERDICT #5). Flat timings across chain
+  * the 5M-doc decade). Flat timings across chain
   * lengths pin the minorEvery cadence guideline for
   * [[graft.streaming.EventStreams.streamingContainment]].
   *
   * On each tier's 16-delta store the gate also times one PLANTED
-  * batch (r17 VERDICT #7): one corpus doc's text replicated
+  * batch: one corpus doc's text replicated
   * batchDocs(>cap) times under novel ids, so every body shingle
   * crosses maxPosting IN the timed batch — a nonempty newly-hot
   * delta that forces the stale-prefix probe + refresh, the path
   * organic batches (empty hot delta) never pay. Its per-batch
   * seconds print beside the organic numbers.
   *
-  * Run: SPARK_GRAFT_SHUFFLE=32 sbt "runMain graft.tools.ContainmentStreamGate /root/testdata/sf0.1"
+  * `cadence` mode records the raw points of a fold-cadence
+  * cost-per-ingested-doc curve (see the comment at its branch).
+  *
+  * Run: SPARK_GRAFT_SHUFFLE=32 sbt "runMain graft.tools.ContainmentStreamGate <sfDir>"
   *      SPARK_GRAFT_SHUFFLE=64 sbt "runMain graft.tools.ContainmentStreamGate target/scale/sf1 chain [batchDocs] [tiers]"
   */
 object ContainmentStreamGate {
@@ -70,14 +72,36 @@ object ContainmentStreamGate {
         "doc_id", "text", 3, 5, graft.operators.Dedup.DefaultMaxPosting)
       (System.nanoTime() - b0) / 1e9
     }
+    // The seeded base's df snapshot, the ranking the chain/cadence
+    // batches below write their prefix rows against.
+    def baseDf(store: String): org.apache.spark.sql.DataFrame =
+      spark.read.parquet(s"$store/docs/batch=base")
+        .select(explode(col("sh")).as("g"))
+        .groupBy(col("g")).agg(count(lit(1)).as("df"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // One committed batch written directly in the store's own format
+    // (shingle sets, postings, prefix rows vs `dfByG`), skipping the
+    // pair mining the measurement does not time.
+    def writeStoreBatch(store: String, part: String,
+        rows: org.apache.spark.sql.DataFrame,
+        dfByG: org.apache.spark.sql.DataFrame): Unit = {
+      val sh = graft.operators.Dedup
+        .containmentShingles(rows, "doc_id", "text", 3, 5)
+      sh.write.mode("overwrite").parquet(s"$store/docs/batch=$part")
+      EventStreams.containmentPostingsOf(sh, sorted = false)
+        .write.mode("overwrite").parquet(s"$store/postings/batch=$part")
+      graft.operators.Dedup.containmentPrefixRows(sh, dfByG)
+        .write.mode("overwrite").parquet(s"$store/prefix/batch=$part")
+    }
 
-    // CADENCE mode (r19 VERDICT #2 — the twice-deferred campaign):
-    // measure everything the cost-per-ingested-doc curve of a fold
-    // cadence k needs, on ONE evolving store per tier, exactly the
-    // state sequence a real cadence produces:
-    //   - per-batch cost at ~0 pending parts, then at each pending
+    // CADENCE mode: measure everything the cost-per-ingested-doc
+    // curve of a fold cadence k needs, on ONE evolving store per tier,
+    // exactly the state sequence a real cadence produces:
+    //   - per-batch cost right after the seed, then at each pending
     //     count P in `pendings` (the LATE-cycle cost of cadence k=P),
-    //     one timed probe per requested batch size;
+    //     one timed probe per requested batch size. Every probe
+    //     commits a part itself, so each point records the live-part
+    //     count its batch actually ran against;
     //   - the minor fold that folds those P pending parts (the
     //     once-per-cycle cost, O(new data) by design);
     //   - one major fold at the end (the O(store) reference point;
@@ -111,10 +135,7 @@ object ContainmentStreamGate {
         EventStreams.seedContainmentBase(base, "doc_id", "text", store,
           minePairs = false)
         val seedSec = (System.nanoTime() - s0) / 1e9
-        val dfByG = spark.read.parquet(s"$store/docs/batch=base")
-          .select(explode(col("sh")).as("g"))
-          .groupBy(col("g")).agg(count(lit(1)).as("df"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val dfByG = baseDf(store)
         var tag = 0L
         var pending = 0 // parts committed since the last fold
         def novelC(n: Int): org.apache.spark.sql.DataFrame = {
@@ -125,37 +146,29 @@ object ContainmentStreamGate {
               lit(" alpha beta gamma delta epsilon")).as("text"))
         }
         def writePending(n: Int, d: Int): Unit = (0 until n).foreach { _ =>
-          val rows = novelC(d)
-          val sh = graft.operators.Dedup
-            .containmentShingles(rows, "doc_id", "text", 3, 5)
-          sh.write.mode("overwrite").parquet(s"$store/docs/batch=b$tag")
-          sh.select(size(col("sh")).as("nsh"), col("doc_id"),
-              explode(col("sh")).as("g"))
-            .select(col("g"), col("doc_id"), col("nsh"))
-            .sortWithinPartitions("g")
-            .write.mode("overwrite").parquet(s"$store/postings/batch=b$tag")
-          graft.operators.Dedup.containmentPrefixRows(sh, dfByG)
-            .write.mode("overwrite").parquet(s"$store/prefix/batch=b$tag")
+          writeStoreBatch(store, s"b$tag", novelC(d), dfByG)
           tag += 1; pending += 1
         }
         def live(): Long = DedupStore.readLive(spark, store, "docs")
           .select(col("batch")).distinct().count()
-        def probe(d: Int): Double = {
-          val sec = batch(store, novelC(d), tag); tag += 1; pending += 1; sec
+        // (batch docs, live parts the batch ran against, seconds)
+        def probe(d: Int): (Int, Long, Double) = {
+          val lv = live()
+          val sec = batch(store, novelC(d), tag); tag += 1; pending += 1
+          (d, lv, sec)
         }
-        // warm-up probe (JIT/plan compile), then the ~0-pending points
+        // warm-up probe (JIT/plan compile), then the right-after-seed points
         probe(sizes.head)
-        val atZero = sizes.map(d => d -> probe(d))
+        val atSeed = sizes.map(probe)
         val perPending = pendings.map { p =>
           writePending(math.max(0, p - pending), sizes.head)
-          val lv = live()
-          val probes = sizes.map(d => d -> probe(d))
+          val probes = sizes.map(probe)
           val f0 = System.nanoTime()
           EventStreams.containmentCompact(spark, store, tag - 1,
             foldBase = false)
           val foldSec = (System.nanoTime() - f0) / 1e9
           val folded = pending; pending = 0
-          (p, lv, probes, foldSec, folded)
+          (p, probes, foldSec, folded)
         }
         val majorSec =
           if (!doMajor) None
@@ -167,14 +180,14 @@ object ContainmentStreamGate {
             Some((System.nanoTime() - f0) / 1e9)
           }
         dfByG.unpersist(false)
-        val zeroJson = atZero.map { case (d, s) =>
-          s""""docs$d":${r1(s)}""" }.mkString("{", ",", "}")
-        val pendJson = perPending.map { case (p, lv, probes, foldSec, folded) =>
-          val pr = probes.map { case (d, s) => s""""docs$d":${r1(s)}""" }
-            .mkString("{", ",", "}")
-          s""""pending$p":{"live_parts":$lv,"batch_sec":$pr,"minor_fold_sec":${r1(foldSec)},"folded_parts":$folded}"""
+        def probesJson(probes: Seq[(Int, Long, Double)]): String =
+          probes.map { case (d, lv, s) =>
+            s""""docs$d":{"sec":${r1(s)},"live_parts":$lv}"""
+          }.mkString("{", ",", "}")
+        val pendJson = perPending.map { case (p, probes, foldSec, folded) =>
+          s""""pending$p":{"batch_sec":${probesJson(probes)},"minor_fold_sec":${r1(foldSec)},"folded_parts":$folded}"""
         }.mkString(",")
-        out += s""""$label":{"base_docs":${baseN * math.max(1, reps)},"seed_sec":${r1(seedSec)},"batch_sec_at_seed":$zeroJson,$pendJson""" +
+        out += s""""$label":{"base_docs":${baseN * math.max(1, reps)},"seed_sec":${r1(seedSec)},"batch_sec_at_seed":${probesJson(atSeed)},$pendJson""" +
           majorSec.fold("")(m => s""","major_fold_sec":${r1(m)}""") + "}"
       }
       println(out.mkString(
@@ -198,16 +211,11 @@ object ContainmentStreamGate {
       // base and file-copied per chain length: the seed (shingle +
       // prefix build over up to 500k docs) dominates, the copy does not.
       // Novel ids live ABOVE every replication band (r*100000000, r up
-      // to 99 for the 100x tier -> bands reach 9.9e9): the old
-      // 10000000*(tag+1) scheme landed exactly on band boundaries at
-      // tags 9/19/29, planting duplicate doc_ids in the measured store
-      // (r16 ADVICE); the r17 base of 1e9 would collide with replica
-      // 10+ once the 100x tier exists.
-      // Ceiling on novel() tags, enforced at BOTH ends of the
-      // disjointness invariant (r19 ADVICE): novel() refuses a tag
-      // above it, and planted() proves its band sits above every
-      // possible novel id. A caller minting tag > ceiling used to
-      // recreate the r18 band collision without tripping any require.
+      // to 99 for the 100x tier -> bands reach 9.9e9), so no novel doc
+      // shares a doc_id with the base (the verify's unique-id
+      // precondition). The tag ceiling is enforced at BOTH ends of the
+      // disjointness invariant: novel() refuses a tag above it, and
+      // planted() proves its band sits above every possible novel id.
       val maxNovelTag = 2000L
       def novel(tag: Long, n: Int) = {
         require(tag <= maxNovelTag,
@@ -226,16 +234,7 @@ object ContainmentStreamGate {
         (0 until deltas).foreach { d =>
           (0 until 2).foreach { j =>
             val b = 2L * d + j
-            val sh = graft.operators.Dedup
-              .containmentShingles(novel(b, batchDocs), "doc_id", "text", 3, 5)
-            sh.write.mode("overwrite").parquet(s"$store/docs/batch=b$b")
-            sh.select(size(col("sh")).as("nsh"), col("doc_id"),
-                explode(col("sh")).as("g"))
-              .select(col("g"), col("doc_id"), col("nsh"))
-              .sortWithinPartitions("g")
-              .write.mode("overwrite").parquet(s"$store/postings/batch=b$b")
-            graft.operators.Dedup.containmentPrefixRows(sh, dfByG)
-              .write.mode("overwrite").parquet(s"$store/prefix/batch=b$b")
+            writeStoreBatch(store, s"b$b", novel(b, batchDocs), dfByG)
           }
           DedupStore.compact(spark, store, 2L * d + 1,
             foldBase = false, subs = subs)
@@ -244,7 +243,7 @@ object ContainmentStreamGate {
       }
       val tiers = (if (args.length > 3) args(3) else "1,10")
         .split(",").map(_.trim.toInt).toSeq
-      // PLANTED newly-hot batch (r17 VERDICT #7): one corpus doc's
+      // PLANTED newly-hot batch: one corpus doc's
       // text under batchDocs novel ids — batchDocs > maxPosting, so
       // every body shingle crosses the cap inside this batch and the
       // stale-prefix probe + refresh run for real.
@@ -256,12 +255,9 @@ object ContainmentStreamGate {
       // Planted band 50e9: DISJOINT from every novel(tag) band
       // (20e9 + 1e7*tag + [0, batchDocs); the require below bounds
       // tags by a 2000 ceiling, i.e. novel ids < 40e9 + batchDocs)
-      // and from the replicated base bands (< 1.7e9 at reps <= 16).
-      // The r18 value 30e9 collided exactly with novel(tag=1000) —
-      // the warm-up batch — re-ingesting b1000's doc_id range as
-      // "planted" docs, which broke containmentVerify's unique-doc-id
-      // determinism contract and polluted the planted_sec gate
-      // evidence (r18 ADVICE, medium).
+      // and from the replicated base bands (< 1.7e9 at reps <= 16):
+      // a planted id reusing the warm-up batch's range would break the
+      // verify's unique-id precondition.
       val plantedBase = 50000000000L
       def planted(n: Int) = {
         require(plantedBase > 20000000000L + 10000000L * maxNovelTag + n,
@@ -283,17 +279,13 @@ object ContainmentStreamGate {
         // increment, not the base's own pair mining.
         EventStreams.seedContainmentBase(base, "doc_id", "text", seed,
           minePairs = false)
-        val dfByG = spark.read.parquet(s"$seed/docs/batch=base")
-          .select(explode(col("sh")).as("g"))
-          .groupBy(col("g")).agg(count(lit(1)).as("df"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val dfByG = baseDf(seed)
         val row = Seq(1, 4, 16).map { deltas =>
           val store = buildChain(seed, s"chain_${label}_$deltas", deltas, dfByG)
           batch(store, novel(1000L, batchDocs), 1000L) // warm-up
           val sec = batch(store, novel(1001L, batchDocs), 1001L)
           // live_parts counted BEFORE the planted probe so it reports
           // the store state the organic `sec` above actually measured
-          // (r18 ADVICE: counting after b1002 read one part high)
           val live = DedupStore.readLive(spark, store, "docs")
             .select(col("batch")).distinct().count()
           // planted probe on the longest chain only: the stale-probe
@@ -312,7 +304,7 @@ object ContainmentStreamGate {
             plantedSec.fold("")(p => s""","planted_sec":${r1(p)}""") + "}"
         }.mkString(",")
       }
-      // STORE-SIZE AXIS (r16 VERDICT #3): per-batch cost must be
+      // STORE-SIZE AXIS: per-batch cost must be
       // SUBLINEAR in base size — median per-delta-count ratio of each
       // tier over the previous one, target well under the 10x data
       // growth (the residual linear term is the flat postings/docs

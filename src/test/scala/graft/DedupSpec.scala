@@ -666,18 +666,8 @@ class DedupSpec extends SparkSpec {
   test("containmentPairs: prefix filter is lossless vs brute force while the posting cap is dormant") {
     val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
       .select(col("doc_id"), col("text"))
-    // brute force: all ordered pairs sharing >= 1 shingle, exact verify
-    val sh = Dedup.containmentShingles(docs, "doc_id", "text")
-    val brute = sh.select(col("doc_id").as("a"), col("sh").as("sha"))
-      .crossJoin(sh.select(col("doc_id").as("b"), col("sh").as("shb")))
-      .filter(col("a") =!= col("b"))
-      .select(col("a"), col("b"),
-        graft.functions.VectorExpressions.sorted_intersect_size(
-          col("sha"), col("shb")).cast("long").as("inter"),
-        size(col("sha")).cast("long").as("na"))
-      .filter(col("inter") / col("na") >= 0.8)
-      .select(col("a"), col("b")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    // brute force: all ordered pairs, exact verify
+    val brute = ContainmentReference.abPairs(docs)
     val got = Dedup.containmentPairs(docs, "doc_id", "text")
       .select(col("a"), col("b")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -699,17 +689,7 @@ class DedupSpec extends SparkSpec {
         val n = 5 + rnd.nextInt(11) // 5..15 tokens -> 3..13 shingles
         (id, Array.fill(n)(vocab(rnd.nextInt(vocab.length))).mkString(" "))
       }.toDF("doc_id", "text")
-      val sh = Dedup.containmentShingles(docs, "doc_id", "text")
-      val brute = sh.select(col("doc_id").as("a"), col("sh").as("sha"))
-        .crossJoin(sh.select(col("doc_id").as("b"), col("sh").as("shb")))
-        .filter(col("a") =!= col("b"))
-        .select(col("a"), col("b"),
-          graft.functions.VectorExpressions.sorted_intersect_size(
-            col("sha"), col("shb")).cast("long").as("inter"),
-          size(col("sha")).cast("long").as("na"))
-        .filter(col("inter") / col("na") >= 0.8)
-        .select(col("a"), col("b")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      val brute = ContainmentReference.abPairs(docs)
       val got = Dedup.containmentPairs(docs, "doc_id", "text")
         .select(col("a"), col("b")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet

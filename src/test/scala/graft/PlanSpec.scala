@@ -446,10 +446,14 @@ class PlanSpec extends SparkSpec {
     // self-join; the sibling branch carries its own input spread), and
     // between the spread exchange and the scan only narrow
     // row-preserving ops may appear — no Generate/explode fan-out.
-    def depth(l: String): Int = l.indexOf("+-") match {
-      case -1 => Int.MaxValue; case i => i
-    }
+    // a node's depth is the column of its connector: "+- " for the
+    // last child, ":- " for the others; the root line has neither
+    val connector = "^[ :]*(?:\\+- |:- )".r
+    def depth(l: String): Int =
+      connector.findPrefixOf(l).fold(-1)(_.length)
     val subtree = below.tail.takeWhile(l => depth(l) > depth(below.head))
+    assert(subtree.nonEmpty, "the keep filter's subtree came out empty:\n" +
+      below.mkString("\n").take(1200))
     val rrIdx = subtree.zipWithIndex
       .filter(_._1.contains("RoundRobinPartitioning")).map(_._2)
     assert(rrIdx.size <= 1,
@@ -514,6 +518,98 @@ class PlanSpec extends SparkSpec {
     assert(schemas.exists(_ == "struct<doc_id:bigint>"), schemas.mkString("; "))
   }
 
+  test("containment_neardup: the verify is one merge join; no cartesian or BNLJ; the shingle table is never broadcast") {
+    // The batch operator runs the melted verify: each candidate pair is
+    // split into its two endpoints and the shingle table is joined ONCE
+    // on doc_id. Two join-backs (one per endpoint) would show as two
+    // sort-merge joins. Every broadcast build side must sit on an
+    // aggregate (the df>cap hot set) on every path to its scan, so the
+    // corpus-sized shingle table is never a broadcast side.
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+      CartesianProductExec, BroadcastNestedLoopJoinExec, SortMergeJoinExec}
+    val p = Queries.all("containment_neardup")(spark, sfDir)
+      .queryExecution.sparkPlan
+    assert(p.collect { case c: CartesianProductExec => c }.isEmpty)
+    assert(p.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty)
+    val smj = p.collect { case j: SortMergeJoinExec => j }
+    assert(smj.size == 1,
+      s"expected the single melted-verify merge join, got ${smj.size}:\n" +
+        p.toString.take(2000))
+    def aggBounded(n: SparkPlan): Boolean = n match {
+      case _: BaseAggregateExec => true
+      case leaf if leaf.children.isEmpty => false
+      case other => other.children.forall(aggBounded)
+    }
+    val bhj = p.collect { case j: BroadcastHashJoinExec => j }
+    assert(bhj.nonEmpty, "expected the hot-set broadcasts")
+    bhj.foreach { j =>
+      val buildSide = j.buildSide match {
+        case org.apache.spark.sql.catalyst.optimizer.BuildLeft => j.left
+        case _ => j.right
+      }
+      assert(aggBounded(buildSide) && !buildSide.output.exists(_.name == "sh"),
+        "a broadcast build side reaches the shingle table without an " +
+          "aggregate:\n" + buildSide.toString.take(800))
+    }
+  }
+
+  /** Representative inputs of one streaming containment micro-batch,
+    * built as containmentIncrementBatch builds them (any sizes — the
+    * pins below assert structure): the store and batch shingle
+    * tables, the batch-pruned store postings and prefix, the batch
+    * prefix and the hot table.
+    */
+  private case class IncrementInputs(storeSh: org.apache.spark.sql.DataFrame,
+      newSh: org.apache.spark.sql.DataFrame,
+      postsStore: org.apache.spark.sql.DataFrame,
+      hotTab: org.apache.spark.sql.DataFrame,
+      storePrefix: org.apache.spark.sql.DataFrame,
+      prefixNew: org.apache.spark.sql.DataFrame)
+
+  private def incrementInputs(): IncrementInputs = {
+    import org.apache.spark.sql.functions.{broadcast, col}
+    import graft.operators.Dedup
+    import spark.implicits._
+    val docs = (1L to 40L).map(i =>
+      (i, (0 to 11).map(j => s"w${(i + j) % 23}").mkString(" ")))
+      .toDF("doc_id", "text")
+    val storeSh = Dedup.containmentShingles(
+      docs.filter(col("doc_id") <= 30), "doc_id", "text")
+    val newSh = Dedup.containmentShingles(
+      docs.filter(col("doc_id") > 30), "doc_id", "text")
+    val postsNew = Dedup.containmentPostings(newSh)
+    val newG = postsNew.select(col("g")).distinct()
+    val postsStore = Dedup.containmentPostings(storeSh)
+      .join(broadcast(newG), Seq("g"), "left_semi")
+    val aggAll = Dedup.containmentShingleStats(postsStore.unionByName(postsNew))
+    val hotTab = aggAll.filter(col("df") > 4)
+    val storePrefix = Dedup.containmentPrefixRows(storeSh,
+        aggAll.select(col("g"), col("df")))
+      .join(broadcast(newG), Seq("g"), "left_semi")
+    val prefixNew = Dedup.containmentPrefixRows(newSh,
+      aggAll.select(col("g"), col("df")))
+    IncrementInputs(storeSh, newSh, postsStore, hotTab, storePrefix,
+      prefixNew)
+  }
+
+  /** The candidate tiers of one micro-batch, composed from the shared
+    * Dedup core exactly as containmentIncrementBatch composes them: a
+    * in NEW vs anyone, a in STORE (stored prefix plus any refreshed
+    * rows) vs NEW, and the star tier over the batch's postings.
+    */
+  private def incrementCandidates(in: IncrementInputs,
+      refreshedPrefix: Option[org.apache.spark.sql.DataFrame] = None) = {
+    import graft.operators.Dedup
+    val postsNew = Dedup.containmentPostings(in.newSh)
+    Dedup.containmentCandidates(
+      Seq(in.prefixNew -> in.postsStore.unionByName(postsNew),
+        refreshedPrefix.fold(in.storePrefix)(in.storePrefix.unionByName(_)) ->
+          postsNew),
+      postsNew, in.hotTab)
+  }
+
   test("streaming containment per-batch plan: pinned shuffle_hash/merge joins, broadcasts only on batch-bounded aggregates, no cartesian") {
     // The plan one micro-batch of streamingContainment executes, built
     // over representative inputs exactly as containmentIncrementBatch
@@ -524,39 +620,13 @@ class PlanSpec extends SparkSpec {
     // the store's postings/prefix map-side — r16 VERDICT #3) and the
     // hot set/table; all are aggregates bounded by the batch or the
     // hot cap. Cold joins stay shuffle_hash, verify joins merge.
-    import org.apache.spark.sql.functions.{broadcast, col, count, explode,
-      lit, min, size, struct}
     import graft.operators.Dedup
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
       CartesianProductExec, BroadcastNestedLoopJoinExec,
       ShuffledHashJoinExec, SortMergeJoinExec}
-    import spark.implicits._
-    val docs = (1L to 40L).map(i =>
-      (i, (0 to 11).map(j => s"w${(i + j) % 23}").mkString(" ")))
-      .toDF("doc_id", "text")
-    val storeSh = Dedup.containmentShingles(
-      docs.filter(col("doc_id") <= 30), "doc_id", "text")
-    val newSh = Dedup.containmentShingles(
-      docs.filter(col("doc_id") > 30), "doc_id", "text")
-    val postsNew = newSh.select(col("doc_id"), size(col("sh")).as("nsh"),
-      explode(col("sh")).as("g"))
-    val newG = postsNew.select(col("g")).distinct()
-    val postsStore = storeSh
-      .select(col("doc_id"), size(col("sh")).as("nsh"),
-        explode(col("sh")).as("g"))
-      .join(broadcast(newG), Seq("g"), "left_semi")
-    val aggAll = postsStore.unionByName(postsNew)
-      .groupBy(col("g")).agg(count(lit(1)).as("df"),
-        min(struct(col("doc_id"), col("nsh"))).as("rep"))
-    val hotTab = aggAll.filter(col("df") > 4)
-    val storePrefix = Dedup.containmentPrefixRows(storeSh,
-        aggAll.select(col("g"), col("df")))
-      .join(broadcast(newG), Seq("g"), "left_semi")
-    val prefixNew = Dedup.containmentPrefixRows(newSh,
-      aggAll.select(col("g"), col("df")))
-    val p = graft.streaming.EventStreams
-      .containmentIncrementPairs(storeSh.unionByName(newSh), newSh,
-        storePrefix, prefixNew, postsStore, hotTab)
+    val in = incrementInputs()
+    val p = Dedup.containmentVerify(in.storeSh.unionByName(in.newSh),
+        incrementCandidates(in), pruneCorpus = false)
       .queryExecution.sparkPlan
     assert(p.collect { case c: CartesianProductExec => c }.isEmpty,
       "cartesian product in the streaming containment batch plan")
@@ -594,40 +664,12 @@ class PlanSpec extends SparkSpec {
     // batch (sorting the whole corpus's shingle arrays) becomes
     // candidate-bounded. The broadcast build must be the endpoint
     // DISTINCT (an aggregate), never the corpus.
-    import org.apache.spark.sql.functions.{broadcast, col, count, explode,
-      lit, min, size, struct}
     import graft.operators.Dedup
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
       CartesianProductExec, BroadcastNestedLoopJoinExec, SortMergeJoinExec}
-    import spark.implicits._
-    val docs = (1L to 40L).map(i =>
-      (i, (0 to 11).map(j => s"w${(i + j) % 23}").mkString(" ")))
-      .toDF("doc_id", "text")
-    val storeSh = Dedup.containmentShingles(
-      docs.filter(col("doc_id") <= 30), "doc_id", "text")
-    val newSh = Dedup.containmentShingles(
-      docs.filter(col("doc_id") > 30), "doc_id", "text")
-    val postsNew = newSh.select(col("doc_id"), size(col("sh")).as("nsh"),
-      explode(col("sh")).as("g"))
-    val newG = postsNew.select(col("g")).distinct()
-    val postsStore = storeSh
-      .select(col("doc_id"), size(col("sh")).as("nsh"),
-        explode(col("sh")).as("g"))
-      .join(broadcast(newG), Seq("g"), "left_semi")
-    val aggAll = postsStore.unionByName(postsNew)
-      .groupBy(col("g")).agg(count(lit(1)).as("df"),
-        min(struct(col("doc_id"), col("nsh"))).as("rep"))
-    val hotTab = aggAll.filter(col("df") > 4)
-    val storePrefix = Dedup.containmentPrefixRows(storeSh,
-        aggAll.select(col("g"), col("df")))
-      .join(broadcast(newG), Seq("g"), "left_semi")
-    val prefixNew = Dedup.containmentPrefixRows(newSh,
-      aggAll.select(col("g"), col("df")))
-    val cand = graft.streaming.EventStreams.containmentCandidates(
-      newSh, storePrefix, prefixNew, postsStore, hotTab)
-    val p = graft.streaming.EventStreams
-      .containmentVerify(storeSh.unionByName(newSh), cand,
-        pruneCorpus = true)
+    val in = incrementInputs()
+    val p = Dedup.containmentVerify(in.storeSh.unionByName(in.newSh),
+        incrementCandidates(in), pruneCorpus = true)
       .queryExecution.sparkPlan
     assert(p.collect { case c: CartesianProductExec => c }.isEmpty)
     assert(p.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty)
@@ -661,47 +703,22 @@ class PlanSpec extends SparkSpec {
     // (broadcast is fine — it is a filtered aggregate), but staleDocs
     // itself is contractually unbounded on degenerate corpora, so the
     // storeSh-semi-join is pinned shuffle_hash.
-    import org.apache.spark.sql.functions.{broadcast, col, count, explode,
-      lit, min, size, struct}
+    import org.apache.spark.sql.functions.{broadcast, col, lit}
     import graft.operators.Dedup
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
       CartesianProductExec, BroadcastNestedLoopJoinExec}
-    import spark.implicits._
-    val docs = (1L to 40L).map(i =>
-      (i, (0 to 11).map(j => s"w${(i + j) % 23}").mkString(" ")))
-      .toDF("doc_id", "text")
-    val storeSh = Dedup.containmentShingles(
-      docs.filter(col("doc_id") <= 30), "doc_id", "text")
-    val newSh = Dedup.containmentShingles(
-      docs.filter(col("doc_id") > 30), "doc_id", "text")
-    val postsNew = newSh.select(col("doc_id"), size(col("sh")).as("nsh"),
-      explode(col("sh")).as("g"))
-    val newG = postsNew.select(col("g")).distinct()
-    val postsStore = storeSh
-      .select(col("doc_id"), size(col("sh")).as("nsh"),
-        explode(col("sh")).as("g"))
-      .join(broadcast(newG), Seq("g"), "left_semi")
-    val aggAll = postsStore.unionByName(postsNew)
-      .groupBy(col("g")).agg(count(lit(1)).as("df"),
-        min(struct(col("doc_id"), col("nsh"))).as("rep"))
-    val hotTab = aggAll.filter(col("df") > 4)
-    val storePrefix = Dedup.containmentPrefixRows(storeSh,
-        aggAll.select(col("g"), col("df")))
-      .join(broadcast(newG), Seq("g"), "left_semi")
-    val prefixNew = Dedup.containmentPrefixRows(newSh,
-      aggAll.select(col("g"), col("df")))
+    val in = incrementInputs()
     // the refresh subplan exactly as containmentIncrementBatch builds it
-    val newlyHot = hotTab.select(col("g"))
-    val staleDocs = storePrefix.join(broadcast(newlyHot), Seq("g"))
+    val newlyHot = in.hotTab.select(col("g"))
+    val staleDocs = in.storePrefix.join(broadcast(newlyHot), Seq("g"))
       .select(col("a").as("doc_id")).distinct()
-    val staleSh = storeSh.join(staleDocs.hint("shuffle_hash"),
+    val staleSh = in.storeSh.join(staleDocs.hint("shuffle_hash"),
       Seq("doc_id"), "left_semi")
     val refreshed = Dedup.containmentPrefixRows(staleSh,
       newlyHot.withColumn("df", lit(5L)))
-    val p = graft.streaming.EventStreams
-      .containmentIncrementPairs(storeSh.unionByName(newSh), newSh,
-        storePrefix, prefixNew, postsStore, hotTab,
-        refreshedPrefix = Some(refreshed))
+    val p = Dedup.containmentVerify(in.storeSh.unionByName(in.newSh),
+        incrementCandidates(in, refreshedPrefix = Some(refreshed)),
+        pruneCorpus = false)
       .queryExecution.sparkPlan
     assert(p.collect { case c: CartesianProductExec => c }.isEmpty)
     assert(p.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty)

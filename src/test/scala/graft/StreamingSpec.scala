@@ -1099,6 +1099,13 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == batchTwin,
       s"streamed pair log diverged from the batch operator:\n" +
         s"streamed-only: ${streamed -- batchTwin}\nbatch-only: ${batchTwin -- streamed}")
+    // the stream and the batch operator share one candidate-and-verify
+    // core, so parity alone could hide a shared defect: check both
+    // against the independent brute-force reference too
+    val brute = ContainmentReference.pairs(full)
+    assert(streamed == brute,
+      s"streamed pair log diverged from brute force:\n" +
+        s"streamed-only: ${streamed -- brute}\nbrute-only: ${brute -- streamed}")
     // sanity: the cross-batch scenarios actually fired
     val ab = streamed.map(p => (p._1, p._2))
     assert(Set((10L, 1L), (21L, 1L), (21L, 10L), (10L, 21L), (30L, 20L))
