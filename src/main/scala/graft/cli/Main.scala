@@ -103,46 +103,55 @@ object Main {
     // files arrive as ingest issues (rendered below under "Errors");
     // only an ingest with NOTHING readable refuses.
     val corpus = readCorpus(spark, o, excel)
-    corpus.foreach { c =>
-      if (c.sheets.isEmpty) {
-        val nBad = c.issues.count()
-        exitOrThrow(1, if (nBad > 0)
-          s"parse-excel --dir: all $nBad workbook files in $excel failed to parse"
-        else s"parse-excel --dir: no workbook files (*.xlsx/*.csv/*.tsv) in $excel")
+    try {
+      corpus.foreach { c =>
+        if (c.sheets.isEmpty) {
+          val nBad = c.issues.count()
+          exitOrThrow(1, if (nBad > 0)
+            s"parse-excel --dir: all $nBad workbook files in $excel failed to parse"
+          else s"parse-excel --dir: no workbook files (*.xlsx/*.csv/*.tsv) in $excel")
+        }
       }
-    }
-    val tables = corpus.map(_.sheets.toSeq.sortBy(_._1))
-      .getOrElse(readInput(spark, excel).toSeq.sortBy(_._1))
+      val tables = corpus.map(_.sheets.toSeq.sortBy(_._1))
+        .getOrElse(readInput(spark, excel).toSeq.sortBy(_._1))
 
-    if (o.contains("--verbose"))
-      // strip the distributed scan's provenance columns for the audit
-      // render, like audit-excel --dir, so "N cols" matches the sheet
-      Audit.preprocess(tables.map { case (k, df) =>
-        k -> (if (corpus.isDefined) df.drop("source_file", "row_idx") else df)
-      }).foreach { e =>
-        println(f"              ${e.step}%-20s ${e.sheet}%-15s ${e.message}")
+      if (o.contains("--verbose"))
+        // strip the distributed scan's provenance columns for the audit
+        // render, like audit-excel --dir, so "N cols" matches the sheet
+        Audit.preprocess(tables.map { case (k, df) =>
+          k -> (if (corpus.isDefined) df.drop("source_file", "row_idx") else df)
+        }).foreach { e =>
+          println(f"              ${e.step}%-20s ${e.sheet}%-15s ${e.message}")
+        }
+
+      // Ontology (J1-J4) when an HPO file is available.
+      val ontology: Option[Ontology] =
+        if (Files.exists(hpoFile)) Some(Ontology.fromObographs(spark, hpoFile.toString))
+        else if (o.contains("--custom-hpo")) exitOrThrow(1, s"HPO file not found: $hpoFile")
+        else None
+
+      val mapper: TableMapper = new DefaultMapper(ontology, strict)
+      val mapped = mapper.applyMapping(spark, tables.toMap)
+      // Corrupt-file ingest issues join the mapping issues channel (the
+      // file path takes the `sheet` slot) so one render covers both.
+      val result = corpus match {
+        case Some(c) => mapped.copy(issues = mapped.issues.unionByName(
+          c.issues.withColumnRenamed("source_file", "sheet")
+            .select(col("sheet"), col("step"), col("level"), col("message"))))
+        case None => mapped
       }
+      // Five actions read the mapping (the sink, stats, the issue counts
+      // and two renders). Persisted, the sink builds the record caches
+      // that stats reads, and the issue counts build the issue cache
+      // that both renders read.
+      result.cached(writeAndReport(o, _))
+    } finally corpus.foreach(_.raw.unpersist(blocking = true))
+    maybeStop(spark)
+  }
 
-    // Ontology (J1-J4) when an HPO file is available.
-    val ontology: Option[Ontology] =
-      if (Files.exists(hpoFile)) Some(Ontology.fromObographs(spark, hpoFile.toString))
-      else if (o.contains("--custom-hpo")) {
-        System.err.println(s"HPO file not found: $hpoFile")
-        sys.exit(1)
-      } else None
-
-    val mapper: TableMapper = new DefaultMapper(ontology, strict)
-    val mapped = mapper.applyMapping(spark, tables.toMap)
-    // Corrupt-file ingest issues join the mapping issues channel (the
-    // file path takes the `sheet` slot) so one render covers both.
-    val result = corpus match {
-      case Some(c) => mapped.copy(issues = mapped.issues.unionByName(
-        c.issues.withColumnRenamed("source_file", "sheet")
-          .select(col("sheet"), col("step"), col("level"), col("message"))))
-      case None => mapped
-    }
-    val bundles = result.bundles
-    val packets = Assemble.phenopackets(bundles)
+  /** parse-excel's sink and stdout report over one mapping result. */
+  private def writeAndReport(o: Map[String, String], result: MappingResult): Unit = {
+    val packets = Assemble.phenopackets(result.bundles)
 
     val ts = java.time.LocalDateTime.now()
       .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd_HH-mm-ss"))
@@ -162,9 +171,9 @@ object Main {
     // aggregate (tiny result); only the first `cap` messages per level
     // are fetched, with an "and N more" line carrying the exact
     // remainder — same discipline as writeNumberedJson's
-    // graft.maxNumberedFiles fail-fast.
-    val issueCap = sys.props.get("graft.maxRenderedIssues").map(_.toInt)
-      .getOrElse(50)
+    // graft.maxNumberedFiles fail-fast. The count query materializes
+    // the persisted issue frame; both renders read it, not the mapping.
+    val cap = issueCap
     val issueCounts = result.issues.groupBy("level").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     def renderIssues(level: String, header: String, plural: String): Unit = {
@@ -173,11 +182,11 @@ object Main {
         println(header)
         result.issues.filter(col("level") === level)
           .orderBy("sheet", "step", "message")
-          .limit(issueCap)
+          .limit(cap)
           .collect().foreach(r => println(s"- ${r.getAs[String]("message")}"))
-        if (n > issueCap)
-          println(s"- … and ${n - issueCap} more $plural " +
-            s"(cap graft.maxRenderedIssues=$issueCap)")
+        if (n > cap)
+          println(s"- … and ${n - cap} more $plural " +
+            s"(cap graft.maxRenderedIssues=$cap)")
       }
     }
     renderIssues("error", "Errors found in mapping:", "errors")
@@ -187,9 +196,11 @@ object Main {
     println(s"Created ${stats("phenotypes")} Phenotype objects")
     require(nWritten == stats("patients"),
       s"wrote $nWritten packets but counted ${stats("patients")} patients")
-    corpus.foreach(_.raw.unpersist(false))
-    maybeStop(spark)
   }
+
+  /** Messages shown per issue level before the "and N more" line. */
+  private def issueCap: Int =
+    sys.props.get("graft.maxRenderedIssues").map(_.toInt).getOrElse(50)
 
   /** A workbook path may be an .xlsx file or a DIRECTORY of .csv/.tsv
     * sheets (one file per sheet, named by basename).
@@ -222,30 +233,31 @@ object Main {
     val excel = o.getOrElse("--excel-path", o("--dir"))
     val spark = session()
     val corpus = readCorpus(spark, o, excel)
-    // Corpus audit granularity: sheets of the same logical kind union
-    // across files, so classification entries are per KIND (the
-    // provenance columns the scan appends are stripped from the column
-    // counts); file-level problems surface as bounded ingest-workbook
-    // entries naming each unparseable file.
-    val tables = corpus
-      .map(_.sheets.view.mapValues(_.drop("source_file", "row_idx")).toSeq.sortBy(_._1))
-      .getOrElse(readInput(spark, excel).toSeq.sortBy(_._1))
-    val ingestEntries = corpus.toSeq.flatMap { c =>
-      val cap = sys.props.get("graft.maxRenderedIssues").map(_.toInt).getOrElse(50)
-      val n = c.issues.count()
-      val shown = c.issues.orderBy("source_file").limit(cap).collect()
-        .map(r => AuditEntry("ingest-workbook",
-          r.getAs[String]("source_file"), r.getAs[String]("message"), "error"))
-      if (n > cap)
-        shown :+ AuditEntry("ingest-workbook", "…",
-          s"and ${n - cap} more unreadable files (cap graft.maxRenderedIssues=$cap)",
-          "error")
-      else shown.toSeq
-    }
-    val entries = ingestEntries ++ Audit.preprocess(tables)
-    if (o.contains("--report-json")) println(Audit.renderJson(entries))
-    else println(Audit.renderTable(entries))
-    corpus.foreach(_.raw.unpersist(false))
+    try {
+      // Corpus audit granularity: sheets of the same logical kind union
+      // across files, so classification entries are per KIND (the
+      // provenance columns the scan appends are stripped from the column
+      // counts); file-level problems surface as bounded ingest-workbook
+      // entries naming each unparseable file.
+      val tables = corpus
+        .map(_.sheets.view.mapValues(_.drop("source_file", "row_idx")).toSeq.sortBy(_._1))
+        .getOrElse(readInput(spark, excel).toSeq.sortBy(_._1))
+      val ingestEntries = corpus.toSeq.flatMap { c =>
+        val cap = issueCap
+        val n = c.issues.count()
+        val shown = c.issues.orderBy("source_file").limit(cap).collect()
+          .map(r => AuditEntry("ingest-workbook",
+            r.getAs[String]("source_file"), r.getAs[String]("message"), "error"))
+        if (n > cap)
+          shown :+ AuditEntry("ingest-workbook", "…",
+            s"and ${n - cap} more unreadable files (cap graft.maxRenderedIssues=$cap)",
+            "error")
+        else shown.toSeq
+      }
+      val entries = ingestEntries ++ Audit.preprocess(tables)
+      if (o.contains("--report-json")) println(Audit.renderJson(entries))
+      else println(Audit.renderTable(entries))
+    } finally corpus.foreach(_.raw.unpersist(blocking = true))
     maybeStop(spark)
   }
 

@@ -5,9 +5,13 @@ import org.apache.spark.sql.functions._
 import graft.functions.P6Functions._
 
 /** Result of mapping one sheet: the typed record rows plus the
-  * error/warning side-channel (SURVEY.md §2.9). Both are lazy plans —
-  * a single pass computes rows and their validation verdicts; records
-  * and issues are two filters over that pass.
+  * error/warning side-channel (SURVEY.md §2.9). Both are lazy plans
+  * over one shared validation projection: records and issues are two
+  * filters over the same per-row verdicts, so the verdict logic exists
+  * once. Sharing the plan does not share its evaluation — every action
+  * on either side re-runs the projection from the scan. Callers that
+  * act on a mapping more than once persist it first, as the CLI does
+  * through [[MappingResult.cached]].
   *
   * [[typed]] exposes the records as a `Dataset[T]` with the case-class
   * Encoder — same plan, compile-time field access for downstream

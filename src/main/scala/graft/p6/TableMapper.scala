@@ -1,6 +1,7 @@
 package graft.p6
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** §2.10 TableMapper SPI — the reference's extension seam
   * (ref: src/P6/mapper.py:118-127): a mapper turns a workbook's sheet
@@ -24,6 +25,25 @@ final case class MappingResult(
 
   def stats: Map[String, Long] =
     Assemble.stats(genotypes, phenotypes, diseases, measurements, biosamples, bundles)
+
+  /** Runs `f` with the five record frames and the issue frame persisted
+    * MEMORY_AND_DISK, then releases all six, blocking, even when `f`
+    * throws. Each frame is then evaluated once, by the first action
+    * that reads it, however many actions `f` runs. `persist` rather
+    * than `localCheckpoint`: a lost block recomputes from lineage.
+    *
+    * The records persist before the issues so that the issue frame's
+    * ontology checks read the cached phenotype records (a frame's
+    * cached plan is fixed when it is persisted, so it only reads caches
+    * registered before it); the release runs in the reverse order so
+    * no still-cached frame depends on one already dropped.
+    */
+  def cached[T](f: MappingResult => T): T = {
+    val frames = Seq(genotypes, phenotypes, diseases, measurements, biosamples, issues)
+    frames.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
+    try f(this)
+    finally frames.reverse.foreach(_.unpersist(blocking = true))
+  }
 }
 
 /** The default pipeline (ref: src/P6/mapper.py DefaultMapper): bind

@@ -248,8 +248,11 @@ class CliSpec extends SparkSpec {
     assert(out.contains("Created 1 Genotype objects"))
   }
 
-  test("parse-excel --dir: multi-workbook corpus through the same pipeline; corrupt file -> error issue, not abort") {
-    val dir = Files.createTempDirectory("cliCorpus")
+  /** `dir/corpus` with two readable workbooks (patients P100 and P200)
+    * and one corrupt file, plus `dir/allbad` holding only a corrupt file
+    * and the ontology `dir/hp.json`.
+    */
+  private def writeCorpus(dir: Path): Path = {
     val corpus = Files.createDirectory(dir.resolve("corpus"))
     def patientRows(id: String) = (
       genotypeRows.head +: genotypeRows.tail.map(r => id +: r.tail),
@@ -260,14 +263,27 @@ class CliSpec extends SparkSpec {
     writeXlsx(corpus.resolve("b.xlsx"), Seq("Variants" -> g2, "HPO" -> p2))
     Files.write(corpus.resolve("broken.xlsx"),
       "definitely not a zip".getBytes(StandardCharsets.UTF_8))
-    val hpo = dir.resolve("hp.json")
-    writeHpoJson(hpo)
+    val allBad = Files.createDirectory(dir.resolve("allbad"))
+    Files.write(allBad.resolve("junk.xlsx"),
+      "also not a zip".getBytes(StandardCharsets.UTF_8))
+    writeHpoJson(dir.resolve("hp.json"))
+    corpus
+  }
+
+  /** In-process `parse-excel --dir <corpus>` with `dir/hp.json`, output under `dir`. */
+  private def parseDir(dir: Path, corpus: Path): String = {
     sys.props("graft.keep-session") = "1"
     sys.props("graft.cwd") = dir.toString
-    val out = try stdoutOf {
+    try stdoutOf {
       graft.cli.Main.parseExcel(Map(
-        "--dir" -> corpus.toString, "--custom-hpo" -> hpo.toString))
+        "--dir" -> corpus.toString, "--custom-hpo" -> dir.resolve("hp.json").toString))
     } finally { sys.props -= "graft.cwd" }
+  }
+
+  test("parse-excel --dir: multi-workbook corpus through the same pipeline; corrupt file -> error issue, not abort") {
+    val dir = Files.createTempDirectory("cliCorpus")
+    val corpus = writeCorpus(dir)
+    val out = parseDir(dir, corpus)
     // both parseable workbooks mapped; the corrupt one degrades to a
     // rendered error NAMING the file, and the command still completes
     // (exit-0 policy: partial corruption never kills a corpus ingest)
@@ -279,14 +295,7 @@ class CliSpec extends SparkSpec {
 
     // NOTHING readable -> nonzero exit (IllegalStateException stands in
     // for exit(1) under the in-process test drive)
-    val allBad = Files.createDirectory(dir.resolve("allbad"))
-    Files.write(allBad.resolve("junk.xlsx"),
-      "also not a zip".getBytes(StandardCharsets.UTF_8))
-    sys.props("graft.cwd") = dir.toString
-    val e = try intercept[IllegalStateException] {
-      graft.cli.Main.parseExcel(Map(
-        "--dir" -> allBad.toString, "--custom-hpo" -> hpo.toString))
-    } finally { sys.props -= "graft.cwd" }
+    val e = intercept[IllegalStateException](parseDir(dir, dir.resolve("allbad")))
     assert(e.getMessage.contains("all 1 workbook files"))
 
     // and -e XOR --dir is enforced
@@ -313,6 +322,66 @@ class CliSpec extends SparkSpec {
       graft.cli.Main.auditExcel(Map("--dir" -> corpus.resolve("a.xlsx").toString))
     }
     assert(e3.getMessage.contains("not a directory"))
+  }
+
+  test("parse-excel: a missing --custom-hpo refuses naming the path instead of exiting the JVM") {
+    val dir = Files.createTempDirectory("clihpo")
+    val wb = dir.resolve("wb.xlsx")
+    writeXlsx(wb, Seq("Variants" -> genotypeRows, "HPO" -> phenotypeRows))
+    val missing = dir.resolve("no-such-hp.json")
+    sys.props("graft.keep-session") = "1"
+    val e = intercept[IllegalStateException] {
+      graft.cli.Main.parseExcel(Map(
+        "--excel-path" -> wb.toString, "--custom-hpo" -> missing.toString))
+    }
+    assert(e.getMessage.contains(missing.toString), e.getMessage)
+  }
+
+  test("parse-excel / audit-excel --dir release every frame they persist, on success and on refusal") {
+    val dir = Files.createTempDirectory("clirelease")
+    val corpus = writeCorpus(dir)
+    def leaked(body: => Any): Set[Int] = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      body
+      spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    }
+    assert(leaked(parseDir(dir, corpus)).isEmpty)
+    assert(leaked(intercept[IllegalStateException](parseDir(dir, dir.resolve("allbad")))).isEmpty)
+    assert(leaked(stdoutOf(graft.cli.Main.auditExcel(Map("--dir" -> corpus.toString)))).isEmpty)
+  }
+
+  test("parse-excel --dir evaluates its mapping once: job and broadcast-build ceilings") {
+    // Without the persisted mapping each of the sink, stats, the issue
+    // counts and the two issue renders re-ran the mapping plan, and the
+    // last three rebuilt the ontology broadcasts. Jobs are counted by a
+    // local property set on this thread (broadcast builds inherit it);
+    // a broadcast build carries Spark's "broadcast exchange" job tag.
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = Files.createTempDirectory("clijobs")
+    val corpus = writeCorpus(dir)
+    val tag = "graft.test.cliJobs"
+    val jobs, broadcasts = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(tag) != null) {
+          jobs.incrementAndGet()
+          if (Option(e.properties.getProperty("spark.job.tags")).exists(
+              _.split(",").exists(_.startsWith("broadcast exchange")))) broadcasts.incrementAndGet()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(tag, "1")
+    val out = try parseDir(dir, corpus) finally {
+      sc.setLocalProperty(tag, null)
+      org.apache.spark.sql.graft.ListenerFlush.flush(spark)
+      sc.removeSparkListener(listener)
+    }
+    assert(out.contains("Wrote 2 phenopacket files to "))
+    // 35 jobs and 11 broadcast builds when every action re-ran the mapping
+    assert(jobs.get <= 33 && broadcasts.get <= 6,
+      s"parse-excel --dir ran ${jobs.get} jobs, ${broadcasts.get} broadcast builds")
   }
 
   test("fromObographs: deprecated flag + IAO:0100001 replacement ids (J2 alt_term_ids)") {
