@@ -27,18 +27,9 @@ object ExecMode {
   def builder(): SparkSession.Builder = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    // AQE coalescing keeps its DEFAULT 1 MB minPartitionSize: a 64k
-    // floor was tried in r19 (motivated by StageProbe showing
-    // dedup_increment verify stages on 2 of 32 tasks) and MEASURED a
-    // consistent net loss across the interleaved A/B matrix (solo
-    // totals 36.7 s at 64k vs 32.0 s at 1m with spread off; every
-    // entry flat-or-worse at 64k) — the extra per-task overhead on
-    // small shuffles outweighs the parallelism on every measured
-    // entry. SPARK_GRAFT_AQE_MIN_PARTITION stays as an experiment
-    // knob only; unset means Spark's default.
-    val b0 = SparkSession.builder().master(master)
-    val b = sys.env.get("SPARK_GRAFT_AQE_MIN_PARTITION").fold(b0)(v =>
-      b0.config("spark.sql.adaptive.coalescePartitions.minPartitionSize", v))
+    // AQE coalescing keeps Spark's default 1 MB minPartitionSize: a 64k
+    // floor measured a net loss (36.7 s vs 32.0 s summed over the registry).
+    val b = SparkSession.builder().master(master)
     if (master.startsWith("local-cluster")) {
       val cp = sys.env.getOrElse("SPARK_GRAFT_EXEC_CP",
         new java.io.File("target/scala-2.13/classes").getAbsolutePath)

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.p6._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -31,7 +30,6 @@ object SparkEntry {
       "biosamples" -> Queries.biosampleSheet(t(spark, dir, "supplier")))
     val result = new DefaultMapper().applyMapping(spark, workbook)
     Assemble.phenopackets(result.bundles)
-      .select(col("patient_id"), to_json(col("packet")).as("packet_json"))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Queries.all

@@ -287,9 +287,7 @@ object Main {
       try Files.copy(in, out, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       finally in.close()
     } catch {
-      case e: Exception =>
-        System.err.println(s"download failed for $url: ${e.getMessage}")
-        sys.exit(1)
+      case e: Exception => exitOrThrow(1, s"download failed for $url: ${e.getMessage}")
     }
     println(s"Saved HPO JSON to $out")
   }
@@ -332,16 +330,14 @@ object Main {
             .map(_.getFileName.toString).toList
         } finally s.close()
       } else Nil
-      tags.sorted(tagOrdering).lastOption.getOrElse {
-        System.err.println(s"download: no release directories under $base " +
-          "(expected {base}/vTAG/hp.json); pass --hpo-version explicitly")
-        sys.exit(1)
-      }
+      tags.sorted(tagOrdering).lastOption.getOrElse(
+        exitOrThrow(1, s"download: no release directories under $base " +
+          "(expected {base}/vTAG/hp.json); pass --hpo-version explicitly"))
     } else {
       val api = sys.props.get("graft.env.GRAFT_HPO_API_URL")
         .orElse(sys.env.get("GRAFT_HPO_API_URL"))
         .getOrElse("https://api.github.com/repos/obophenotype/human-phenotype-ontology/releases/latest")
-      try {
+      val tag = try {
         // bounded timeouts: in a zero-egress environment this must fail
         // fast with the pass---hpo-version hint, not hang on connect
         val conn = java.net.URI.create(api).toURL.openConnection()
@@ -349,18 +345,15 @@ object Main {
         conn.setReadTimeout(10000)
         val in = conn.getInputStream
         val body = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-        val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
-        val tag = node.path("tag_name").asText("")
-        if (tag.isEmpty) {
-          System.err.println(s"download: no tag_name in latest-release response from $api")
-          sys.exit(1)
-        }
-        tag
+        new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+          .path("tag_name").asText("")
       } catch {
         case e: Exception =>
-          System.err.println(s"download: latest-release lookup failed ($api: " +
+          exitOrThrow(1, s"download: latest-release lookup failed ($api: " +
             s"${e.getMessage}); pass --hpo-version explicitly in offline mode")
-          sys.exit(1)
       }
+      if (tag.isEmpty)
+        exitOrThrow(1, s"download: no tag_name in latest-release response from $api")
+      tag
     }
 }

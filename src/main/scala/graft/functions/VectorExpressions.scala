@@ -71,9 +71,9 @@ object VectorExpressions {
   /** Whole GA4GH phenopacket rendered as JSON in one codegen'd pass
     * over the patient's bundle arrays — the non-HOF replacement for
     * `to_json(struct(...transform×5...))`, byte-identical to it
-    * (AssembleSpec pins equality). Genotype records must carry the
-    * pre-shuffle `gnorm`/`genocode` render columns (see
-    * [[graft.p6.Assemble.withPacketRenderCols]]).
+    * (PipelineSpec pins equality). Genotype records must carry the
+    * pre-shuffle `gnorm`/`genocode` render columns that
+    * [[graft.p6.Assemble.groupByPatient]] appends.
     */
   def phenopacket_json(patientId: Column, phen: Column, geno: Column,
       dis: Column, meas: Column, bios: Column): Column =

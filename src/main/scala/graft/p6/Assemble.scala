@@ -1,6 +1,6 @@
 package graft.p6
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.P6Functions
 
@@ -12,8 +12,8 @@ import graft.functions.P6Functions
   * nullable struct slot, UNION the five tables, and aggregate once —
   * five null-skipping collect_lists behind a SINGLE shuffle on
   * patient_id (a patient may appear in any subset of sheets), then one
-  * nested-struct projection + to_json. Nothing is ever materialized on
-  * the driver.
+  * native `phenopacket_json` projection renders each packet's JSON.
+  * Nothing is ever materialized on the driver.
   */
 object Assemble {
 
@@ -41,12 +41,16 @@ object Assemble {
     * sheet arrival order — the deterministic-across-partitionings form
     * the byte-gated packet oracle compares against (one sort instead
     * of an __ord sort discarded by a re-sort).
+    *
+    * Genotype records carry the packet render columns of
+    * [[withPacketRenderCols]], so every bundle is ready for
+    * [[phenopackets]].
     */
   def groupByPatient(genotypes: DataFrame, phenotypes: DataFrame,
       diseases: DataFrame, measurements: DataFrame, biosamples: DataFrame,
       canonical: Boolean = false): DataFrame = {
     val tables = Seq(
-      (genotypes, "genotype_patient_ID", "genotype_records"),
+      (withPacketRenderCols(genotypes), "genotype_patient_ID", "genotype_records"),
       (phenotypes, "phenotype_patient_ID", "phenotype_records"),
       (diseases, "patient_ID", "disease_records"),
       (measurements, "patient_ID", "measurement_records"),
@@ -92,102 +96,36 @@ object Assemble {
       names.map(n => col(n).getField("rec").as(n)): _*)
   }
 
-  /** A2: per-patient GA4GH Phenopacket as a nested struct column
-    * (ref: src/P6/mapper.py:793-910; descriptor ref: src/P6/genotype.py:274-299).
-    * `packet` is the struct; add `to_json(col("packet"))` for the S4 sink.
+  /** Per-row packet render columns, appended AFTER the genotype
+    * frame's existing columns, before the bundle shuffle: `gnorm` (F8
+    * normalized g. expression) and `genocode` (F12 GENO allelic-state
+    * code). On the narrow pre-collect frame these are plain codegen'd
+    * column expressions, not per-array-element work post-collect.
+    * Appending them last preserves [[groupByPatient]]'s canonical sort
+    * order: both are functions of earlier fields (hgvsg, zygosity), so
+    * they can never decide a comparison the prefix left tied.
     */
-  def phenopackets(bundles: DataFrame): DataFrame = {
-    val features = transform(col("phenotype_records"), p =>
-      struct(
-        struct(p.getField("HPO_ID").as("id")).as("type"),
-        (!p.getField("status")).as("excluded")))
-
-    val interpretations = transform(col("genotype_records"), (grec, i) => {
-      val gNorm = P6Functions.normalizeGExpression(grec.getField("hgvsg"))
-      val descriptor = struct(
-        when(gNorm.isNotNull,
-          array(struct(lit("hgvs").as("syntax"), gNorm.as("value"))))
-          .otherwise(array().cast("array<struct<syntax:string,value:string>>"))
-          .as("expressions"),
-        struct(
-          P6Functions.genoAllelicState(grec.getField("zygosity")).as("id"),
-          grec.getField("zygosity").as("label")).as("allelic_state"),
-        struct(grec.getField("gene_symbol").as("symbol")).as("gene_context"))
-      struct(
-        concat(col("patient_id"), lit("-interpretation-"), i.cast("string")).as("id"),
-        lit("COMPLETED").as("progress_status"),
-        struct(
-          array(struct(
-            col("patient_id").as("subject_or_biosample_id"),
-            lit("CONTRIBUTORY").as("interpretation_status"),
-            struct(descriptor.as("variation_descriptor"))
-              .as("variant_interpretation"))).as("genomic_interpretations"))
-          .as("diagnosis"))
-    })
-
-    val diseases = transform(col("disease_records"), d =>
-      struct(struct(
-        d.getField("disease_term").as("id"),
-        d.getField("disease_label").as("label")).as("term")))
-
-    val measurements = transform(col("measurement_records"), m =>
-      struct(struct(m.getField("measurement_type").as("id")).as("type")))
-
-    val biosamples = transform(col("biosample_records"), b =>
-      struct(
-        b.getField("biosample_id").as("id"),
-        struct(b.getField("biosample_type").as("id")).as("type")))
-
-    bundles.select(
-      col("patient_id"),
-      struct(
-        col("patient_id").as("id"),
-        struct(col("patient_id").as("id")).as("subject"),
-        features.as("phenotypic_features"),
-        interpretations.as("interpretations"),
-        diseases.as("diseases"),
-        measurements.as("measurements"),
-        biosamples.as("biosamples")).as("packet"))
-  }
-
-  /** Per-row packet render columns, appended to the GENOTYPE record
-    * frame BEFORE the bundle shuffle: `gnorm` (F8 normalized g.
-    * expression) and `genocode` (F12 GENO allelic-state code). On the
-    * narrow pre-collect frame these are plain codegen'd column
-    * expressions; inside the post-collect `transform` lambdas of
-    * [[phenopackets]] the same logic runs interpreted per array
-    * element (the round-12 flagship CPU term). Appending AFTER the
-    * existing columns preserves [[groupByPatient]]'s canonical sort
-    * order: both are functions of earlier fields (hgvsg, zygosity),
-    * so they can never decide a comparison the prefix left tied.
-    */
-  def withPacketRenderCols(genotypes: DataFrame): DataFrame =
+  private def withPacketRenderCols(genotypes: DataFrame): DataFrame =
     genotypes
       .withColumn("gnorm", P6Functions.normalizeGExpression(col("hgvsg")))
       .withColumn("genocode", P6Functions.genoAllelicState(col("zygosity")))
 
-  /** A2 + JSON serialization in ONE native kernel
-    * ([[graft.functions.VectorExpressions.phenopacket_json]]): returns
-    * (patient_id, packet_json), byte-identical to
-    * `phenopackets(bundles).select(to_json(col("packet")))` (AssembleSpec
-    * pins it) without the interpreted HOF/to_json projection. Bundles
-    * must come from [[groupByPatient]] with genotype records carrying
-    * [[withPacketRenderCols]]'s gnorm/genocode.
+  /** A2: per-patient GA4GH Phenopacket JSON (ref: src/P6/mapper.py:793-910;
+    * descriptor ref: src/P6/genotype.py:274-299), rendered by ONE native
+    * kernel ([[graft.functions.VectorExpressions.phenopacket_json]]) over
+    * [[groupByPatient]]'s bundles. Returns (patient_id, packet_json).
     */
-  def phenopacketsJson(bundles: DataFrame): DataFrame = {
-    // The kernel hard-codes ignoreNullFields=true rendering (null
-    // fields omitted). A session running with
-    // spark.sql.jsonGenerator.ignoreNullFields=false would expect
-    // to_json to EMIT nulls, silently breaking the byte-compat
-    // contract (and the AssembleSpec equality pin, which only runs
-    // under the default) — fail loudly instead of diverging.
+  def phenopackets(bundles: DataFrame): DataFrame = {
+    // The kernel renders with ignoreNullFields=true semantics (null
+    // fields omitted). A session setting
+    // spark.sql.jsonGenerator.ignoreNullFields=false expects nulls to
+    // be emitted — fail loudly instead of silently diverging from it.
     val conf = bundles.sparkSession.conf
       .get("spark.sql.jsonGenerator.ignoreNullFields", "true")
     require(conf.toBoolean,
-      "phenopacketsJson renders with ignoreNullFields=true semantics; " +
+      "phenopackets renders packets with null fields omitted; the " +
         "session sets spark.sql.jsonGenerator.ignoreNullFields=false, " +
-        "which the native kernel does not honor — unset it or use " +
-        "phenopackets(bundles) + to_json for that layout")
+        "which the packet renderer does not honor — unset it")
     bundles.select(
       col("patient_id"),
       graft.functions.VectorExpressions.phenopacket_json(
@@ -197,6 +135,13 @@ object Assemble {
         .as("packet_json"))
   }
 
+  /** Hard cap on the driver-side numbered/legacy sink. Overridable via
+    * `-Dgraft.maxNumberedFiles=N` for parity runs that genuinely need
+    * more; the scale path is [[writePartitioned]].
+    */
+  def maxNumberedFiles: Long =
+    sys.props.get("graft.maxNumberedFiles").map(_.toLong).getOrElse(100000L)
+
   /** S4 sink: one JSON document per patient under `outDir`. The
     * reference numbers files 1.json..N.json in iteration order
     * (src/P6/__main__.py:200-212); we honor that naming for parity at
@@ -205,15 +150,8 @@ object Assemble {
     * (`<patient_id>.json`, src/P6/__main__.py:313-391) — a user
     * migrating old output layouts needs both. At 100 TB the idiomatic
     * layout is `write.partitionBy("patient_id").text(...)` — provided
-    * as `writePartitioned`.
+    * as [[writePartitioned]]. `packets` is [[phenopackets]]' output.
     */
-  /** Hard cap on the driver-side numbered/legacy sink. Overridable via
-    * `-Dgraft.maxNumberedFiles=N` for parity runs that genuinely need
-    * more; the scale path is [[writePartitioned]].
-    */
-  def maxNumberedFiles: Long =
-    sys.props.get("graft.maxNumberedFiles").map(_.toLong).getOrElse(100000L)
-
   def writeNumberedJson(packets: DataFrame, outDir: String,
       legacyNames: Boolean = false): Long = {
     // fail fast BEFORE writing: the numbered layout is a driver-side
@@ -222,11 +160,11 @@ object Assemble {
     // Curation.bucketHistogram: bounded fetch (cap+1 rows — the same
     // driver-memory bound the success path already implies), error
     // names the knob and the scale alternative. ONE execution: a
-    // separate count() probe would run the whole Janino-heavy packet
-    // pipeline twice.
+    // separate count() probe would run the whole packet pipeline
+    // twice.
     val cap = maxNumberedFiles
     val rows = packets
-      .select(col("patient_id"), to_json(col("packet")).as("json"))
+      .select(col("patient_id"), col("packet_json"))
       .orderBy(col("patient_id"))
       .limit(math.min(cap, Int.MaxValue - 2L).toInt + 1)
       .collect() // parity path: one small file per patient, driver-side
@@ -243,19 +181,11 @@ object Assemble {
     rows.length.toLong
   }
 
-  def writePartitioned(packets: DataFrame, outDir: String): Unit =
-    packets.select(col("patient_id"), to_json(col("packet")).as("json"))
-      .write.mode("overwrite").partitionBy("patient_id").text(outDir)
-
-  /** The 100 TB sink shape: [[phenopacketsJson]]'s (patient_id,
-    * packet_json) written partitionBy(patient_id) — same layout as
-    * [[writePartitioned]] but the JSON comes from the native kernel
-    * instead of the interpreted to_json projection (byte-identical;
-    * at scale the projection was the flagship path's largest CPU
-    * term, BASELINE.md round 13).
+  /** The distributed S4 layout: [[phenopackets]]' JSON written under
+    * one `patient_id=<id>` directory per patient.
     */
-  def writePartitionedJson(packetJson: DataFrame, outDir: String): Unit =
-    packetJson.select(col("patient_id"), col("packet_json").as("json"))
+  def writePartitioned(packets: DataFrame, outDir: String): Unit =
+    packets.select(col("patient_id"), col("packet_json"))
       .write.mode("overwrite").partitionBy("patient_id").text(outDir)
 
   /** A3: run statistics (ref: src/P6/mapper.py:176-185) computed in ONE

@@ -407,9 +407,8 @@ object Queries {
     // input from 14-field genotype structs to 4 (r11's probe attributed
     // the sf10 entry's dominant +31 s to that projection).
     val canon = Assemble.groupByPatient(
-      Assemble.withPacketRenderCols(
-        g.records.select("genotype_patient_ID", "contact_email", "hgvsg",
-          "zygosity", "gene_symbol")),
+      g.records.select("genotype_patient_ID", "contact_email", "hgvsg",
+        "zygosity", "gene_symbol"),
       p.records,
       d.records.select("patient_ID", "disease_term", "disease_label"),
       m.records.select("patient_ID", "measurement_type"),
@@ -425,11 +424,11 @@ object Queries {
     // ordering, so rows come out identically ordered with the
     // projection executed ONCE. The projection itself is the round-13
     // non-HOF kernel: gnorm/genocode are codegen'd per-ROW pre-shuffle
-    // (withPacketRenderCols), and the whole packet renders in one
-    // native phenopacket_json pass — replacing the
-    // CodegenFallback-interpreted to_json + 5 HOF transforms that were
-    // the registry's largest sf10 CPU term (BASELINE.md round 12).
-    Assemble.phenopacketsJson(canon.orderBy(col("patient_id")))
+    // (groupByPatient), and the whole packet renders in one native
+    // phenopacket_json pass — replacing the CodegenFallback-interpreted
+    // to_json + 5 HOF transforms that were the registry's largest sf10
+    // CPU term (BASELINE.md round 12).
+    Assemble.phenopackets(canon.orderBy(col("patient_id")))
   }
 
   /** Synthetic ontology over the part keys: term HP:%07d per key,
@@ -3782,22 +3781,6 @@ object Queries {
     "p6_workbooks_distributed" -> (p6WorkbooksDistributed _),
     "semdedup_planted" -> (semDedupPlanted _))
 
-  /** Shared closed-form for the cold and warm incremental-dedup
-    * entries (identical outputs by construction — DedupSpec pins warm
-    * == cold row-for-row). Base wins on exact J >= 0.5 vs ANY base
-    * doc; within the increment min id wins via components over the
-    * exact edge set, computed even for base-killed members (matching
-    * [[graft.operators.Dedup.dedupIncrement]], where components are
-    * built before the anti join).
-    */
-  /** One row of the sign-random-projection hyperplane matrix as a SQL
-    * DOUBLE[] literal: w(k)(j) = +/-1 by bit 13 of xxhash64(j, seed
-    * xxhash64(k, 42)) — the SAME data-independent constants the
-    * [[org.apache.spark.sql.graft.SignProjection]] kernel tabulates, so
-    * the DuckDB oracle recomputes the LSH buckets closed-form by
-    * plain dot products (applying +/-1 weights via list_dot_product
-    * reproduces the kernel's ascending-j summation bit for bit).
-    */
   /** BATCH IVF-PQ: the amortized production shape for the composed
     * index — one plan serves the 20-query set: per-query ADC tables /
     * probed lists / <q,c> terms are bounded driver arithmetic, the
@@ -4070,6 +4053,14 @@ object Queries {
       ORDER BY vec_id"""
   }
 
+  /** One row of the sign-random-projection hyperplane matrix as a SQL
+    * DOUBLE[] literal: w(k)(j) = +/-1 by bit 13 of xxhash64(j, seed
+    * xxhash64(k, 42)) — the SAME data-independent constants the
+    * [[org.apache.spark.sql.graft.SignProjection]] kernel tabulates, so
+    * the DuckDB oracle recomputes the LSH buckets closed-form by
+    * plain dot products (applying +/-1 weights via list_dot_product
+    * reproduces the kernel's ascending-j summation bit for bit).
+    */
   private def lshSignRow(k: Int, dim: Int): String = {
     import org.apache.spark.sql.catalyst.expressions.XxHash64Function
     import org.apache.spark.sql.types.IntegerType
@@ -4279,6 +4270,14 @@ object Queries {
         TRUE AS planted_recall_ok
       FROM f"""
 
+  /** Shared closed-form for the cold and warm incremental-dedup
+    * entries (identical outputs by construction — DedupSpec pins warm
+    * == cold row-for-row). Base wins on exact J >= 0.5 vs ANY base
+    * doc; within the increment min id wins via components over the
+    * exact edge set, computed even for base-killed members (matching
+    * [[graft.operators.Dedup.dedupIncrement]], where components are
+    * built before the anti join).
+    */
   private val IncrementOracleSql: String =
     """WITH RECURSIVE sh0 AS (
         SELECT doc_id,

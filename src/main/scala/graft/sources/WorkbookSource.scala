@@ -104,15 +104,22 @@ object WorkbookSource {
     * materialized as grids immediately after anyway, so the peak is
     * the same order as the streaming read — bounded by the
     * decompression caps above.
+    *
+    * A stream read stops without error at a local header cut short, so
+    * the bytes must end in a central directory that lists exactly the
+    * entries read: a truncated file is refused like [[readRaw]] refuses
+    * it, never parsed with its trailing sheets missing.
     */
   def readRawBytes(label: String, bytes: Array[Byte]): Map[String, Seq[Seq[String]]] = {
     val entries = mutable.Map.empty[String, Array[Byte]]
+    var nRead = 0
     val zin = new java.util.zip.ZipInputStream(
       new java.io.ByteArrayInputStream(bytes))
     try {
       var total = 0L
       var e = zin.getNextEntry
       while (e != null) {
+        nRead += 1
         if (!e.isDirectory) {
           val part = readBounded(zin, MaxInflatedEntryBytes, label,
             s"zip entry ${e.getName}")
@@ -132,8 +139,27 @@ object WorkbookSource {
     } finally zin.close()
     if (entries.isEmpty)
       throw new IllegalArgumentException(s"$label: not a readable xlsx (empty zip)")
+    val listed = centralDirectoryCount(bytes)
+    if (!listed.contains(nRead))
+      throw new IllegalArgumentException(s"$label: not a readable xlsx (truncated zip: " +
+        listed.fold("no end-of-central-directory record")(n =>
+          s"$nRead of $n entries readable") + ")")
     parseWorkbook(label,
       name => entries.get(name).map(new java.io.ByteArrayInputStream(_)))
+  }
+
+  /** Entry count of the end-of-central-directory record that ends `b`,
+    * or None when no such record ends it. A zip64 archive of 65,535 or
+    * more entries (far more than any workbook) stores 0xffff there, so
+    * it is refused.
+    */
+  private def centralDirectoryCount(b: Array[Byte]): Option[Int] = {
+    def u16(i: Int): Int = (b(i) & 0xff) | (b(i + 1) & 0xff) << 8
+    // 22 fixed bytes, then a comment of up to 65,535 bytes
+    (b.length - 22 to math.max(0, b.length - 22 - 0xffff) by -1)
+      .find(i => u16(i) == 0x4b50 && u16(i + 2) == 0x0605 &&
+        i + 22 + u16(i + 20) == b.length)
+      .map(i => u16(i + 10))
   }
 
   /** Extension dispatch for the distributed scan: xlsx → zip/XML

@@ -25,11 +25,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * dispatch, one codegen'd call per patient.
   *
   * Byte-compatibility contract with the `to_json` form it replaces
-  * (AssembleSpec pins equality on organic data AND on
-  * escape/null-heavy fixtures):
-  *   - field order = struct field order (id, subject,
+  * (PipelineSpec pins equality against that form, kept as the
+  * test-scope byte reference `PacketReference`, on mapped CLI bundles
+  * AND on escape/null-heavy fixtures):
+  *   - field order = the reference struct's field order (id, subject,
   *     phenotypic_features, interpretations, diseases, measurements,
-  *     biosamples; nested orders as in [[graft.p6.Assemble.phenopackets]]);
+  *     biosamples; nested orders as in `PacketReference`);
   *   - null fields are OMITTED (Spark's default
   *     spark.sql.jsonGenerator.ignoreNullFields=true), including a
   *     null bundle array omitting its whole field;
@@ -40,11 +41,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Inputs: (patient_id string, phenotype_records, genotype_records,
   * disease_records, measurement_records, biosample_records), the
-  * CANONICAL bundle arrays of [[graft.p6.Assemble.groupByPatient]].
+  * bundle arrays of [[graft.p6.Assemble.groupByPatient]] (canonical or
+  * arrival order).
   * Genotype records must carry the per-row render columns `gnorm`
   * (normalized g. expression, F8) and `genocode` (GENO allelic-state
   * code, F12) — computed pre-shuffle by
-  * [[graft.p6.Assemble.withPacketRenderCols]], where they are plain
+  * [[graft.p6.Assemble.groupByPatient]], where they are plain
   * codegen'd column expressions on the narrow record frame, instead
   * of per-array-element HOF work post-collect.
   */

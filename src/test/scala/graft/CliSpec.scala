@@ -468,6 +468,20 @@ class CliSpec extends SparkSpec {
     } finally server.stop(0)
   }
 
+  test("download: a file:// mirror with no vTAG directories refuses naming the base instead of exiting the JVM") {
+    val dir = Files.createTempDirectory("dl-none")
+    // a non-release directory is not a version: the mirror has none
+    Files.createDirectories(dir.resolve("releases").resolve("latest"))
+    val base = s"file://${dir.resolve("releases")}"
+    sys.props("graft.keep-session") = "1"
+    val e = intercept[IllegalStateException] {
+      withEnv("GRAFT_HPO_BASE_URL", base) {
+        graft.cli.Main.download(Map("--data-path" -> dir.resolve("data").toString))
+      }
+    }
+    assert(e.getMessage.contains(base), e.getMessage)
+  }
+
   /** JDK 17 blocks env mutation; emulate via a sys.prop fallback the
     * command consults first — see Main.download.
     */

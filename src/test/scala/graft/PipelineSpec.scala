@@ -70,22 +70,25 @@ class PipelineSpec extends SparkSpec {
 
     val pkts = Assemble.phenopackets(bundles).collect()
     assert(pkts.length == 1)
-    val pkt = pkts(0).getStruct(1)
-    assert(pkt.getAs[String]("id") == "P100")
-    assert(pkt.getStruct(pkt.fieldIndex("subject")).getAs[String]("id") == "P100")
-    val features = pkt.getSeq[org.apache.spark.sql.Row](pkt.fieldIndex("phenotypic_features"))
-    assert(features.head.getStruct(0).getAs[String]("id") == "HP:0000510")
-    assert(!features.head.getAs[Boolean]("excluded"))
-    val interp = pkt.getSeq[org.apache.spark.sql.Row](pkt.fieldIndex("interpretations")).head
-    assert(interp.getAs[String]("id") == "P100-interpretation-0")
-    val gi = interp.getStruct(interp.fieldIndex("diagnosis"))
-      .getSeq[org.apache.spark.sql.Row](0).head
-    val vd = gi.getStruct(gi.fieldIndex("variant_interpretation")).getStruct(0)
-    val expressions = vd.getSeq[org.apache.spark.sql.Row](vd.fieldIndex("expressions"))
-    assert(expressions.head.getAs[String]("value") == "16:g.100A>G")
-    val allelic = vd.getStruct(vd.fieldIndex("allelic_state"))
-    assert(allelic.getAs[String]("id") == "GENO:0000135")
-    assert(allelic.getAs[String]("label") == "heterozygous")
+    // fields are read from the JSON the sink writes; `get` of a missing
+    // field is null and `textValue` of a non-string node is null, so an
+    // absent or mistyped field fails
+    val pkt = new com.fasterxml.jackson.databind.ObjectMapper().readTree(pkts(0).getString(1))
+    assert(pkt.get("id").textValue == "P100")
+    assert(pkt.get("subject").get("id").textValue == "P100")
+    val features = pkt.get("phenotypic_features")
+    assert(features.get(0).get("type").get("id").textValue == "HP:0000510")
+    val excluded = features.get(0).get("excluded")
+    assert(excluded.isBoolean && !excluded.booleanValue)
+    val interp = pkt.get("interpretations").get(0)
+    assert(interp.get("id").textValue == "P100-interpretation-0")
+    val gi = interp.get("diagnosis").get("genomic_interpretations").get(0)
+    val vd = gi.get("variant_interpretation").get("variation_descriptor")
+    val expressions = vd.get("expressions")
+    assert(expressions.get(0).get("value").textValue == "16:g.100A>G")
+    val allelic = vd.get("allelic_state")
+    assert(allelic.get("id").textValue == "GENO:0000135")
+    assert(allelic.get("label").textValue == "heterozygous")
   }
 
   test("golden packet guard: p6_phenopacket_json bytes at sf0.001 are pinned by md5") {
@@ -102,6 +105,21 @@ class PipelineSpec extends SparkSpec {
     val hex = md.digest().map("%02x".format(_)).mkString
     assert(hex == "3da85fefec8e19f2d49bdb1b53138371",
       s"packet JSON drifted from the golden bytes: md5 now $hex over ${rows.length} packets")
+  }
+
+  /** Renders `bundles` with the kernel and with [[PacketReference]] and
+    * asserts byte equality; returns the kernel's (patient_id, json).
+    */
+  private def assertKernelMatchesReference(
+      bundles: org.apache.spark.sql.DataFrame): Array[(String, String)] = {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getString(1)))
+    val viaKernel = rows(Assemble.phenopackets(bundles))
+    val viaReference = rows(PacketReference.render(bundles))
+    assert(viaKernel.toSeq == viaReference.toSeq,
+      s"kernel diverged from to_json:\n${viaKernel.zip(viaReference)
+        .filter(p => p._1 != p._2).take(2).mkString("\n")}")
+    viaKernel
   }
 
   test("phenopacket_json kernel is byte-identical to the to_json + HOF projection") {
@@ -133,21 +151,34 @@ class PipelineSpec extends SparkSpec {
       ("PB", "B2", null.asInstanceOf[String]))
       .toDF("patient_ID", "biosample_id", "biosample_type")
 
-    val bundles = Assemble.groupByPatient(
-      Assemble.withPacketRenderCols(geno), phen, dis, meas, bios,
+    val bundles = Assemble.groupByPatient(geno, phen, dis, meas, bios,
       canonical = true).orderBy(col("patient_id"))
-    val viaHof = Assemble.phenopackets(bundles)
-      .select(col("patient_id"), to_json(col("packet")).as("packet_json"))
-      .collect().map(r => (r.getString(0), r.getString(1)))
-    val viaKernel = Assemble.phenopacketsJson(bundles)
-      .collect().map(r => (r.getString(0), r.getString(1)))
-    assert(viaKernel.toSeq == viaHof.toSeq,
-      s"kernel diverged from to_json:\n${viaKernel.zip(viaHof)
-        .filter(p => p._1 != p._2).take(2).mkString("\n")}")
+    val viaKernel = assertKernelMatchesReference(bundles)
     // sanity: the adversarial branches actually executed
     val all = viaKernel.map(_._2).mkString
     assert(all.contains("\\\"") && all.contains("\\\\") && all.contains("\\u0001"))
     assert(all.contains("\"expressions\":[]"))
+  }
+
+  test("phenopacket_json kernel is byte-identical to the reference on the CLI's bundle shape") {
+    // The shape parse-excel renders: arrival-order bundles of FULL
+    // mapped records (every sheet column, not the registry entry's
+    // pruned canonical ones) straight from DefaultMapper.applyMapping.
+    val dir = "/root/testdata/sf0.001"
+    val workbook = Map(
+      "variants" -> Queries.genotypeSheet(Tables(spark, dir, "part")),
+      "hpo" -> Queries.phenotypeSheet(Tables(spark, dir, "documents")),
+      "diseases" -> Queries.diseaseSheet(Tables(spark, dir, "orders")),
+      "measurements" -> Queries.measurementSheet(Tables(spark, dir, "events")),
+      "biosamples" -> Queries.biosampleSheet(Tables(spark, dir, "supplier")))
+    // persisted: both renderers must read the same arrival order
+    val bundles = new DefaultMapper().applyMapping(spark, workbook).bundles.persist()
+    try {
+      val viaKernel = assertKernelMatchesReference(bundles)
+      assert(viaKernel.nonEmpty)
+      // multi-record bundles ran the index and comma logic
+      assert(viaKernel.exists(_._2.contains("-interpretation-1\"")))
+    } finally bundles.unpersist(blocking = true)
   }
 
   test("genotype explode: multi-token zip truncation + row-scoped bail (ref test_mapper_parse_genotype_row)") {

@@ -165,7 +165,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("p6_phenopacket_json: the native kernel renders the packet — no to_json, no codegen fallback on the projection") {
-    // The byte pin (AssembleSpec: kernel == old to_json form) and the
+    // The byte pin (PipelineSpec: kernel == old to_json form) and the
     // shuffle pin above both SURVIVE a silent fallback to the
     // interpreted HOF + StructsToJson path — which would re-pay the
     // 2.2x sf10 cost while staying green. Assert the plan actually

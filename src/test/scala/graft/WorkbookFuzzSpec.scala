@@ -224,18 +224,60 @@ class WorkbookFuzzSpec extends SparkSpec {
       try {
         val bytes = java.nio.file.Files.readAllBytes(path)
         val cut = java.nio.file.Files.createTempFile("truncwb", ".xlsx")
-        java.nio.file.Files.write(cut,
-          java.util.Arrays.copyOf(bytes, math.max(1, (bytes.length * frac).toInt)))
+        val cutBytes = java.util.Arrays.copyOf(bytes, math.max(1, (bytes.length * frac).toInt))
+        java.nio.file.Files.write(cut, cutBytes)
         try {
           // a cut anywhere kills the central directory at the tail:
-          // the reader must refuse with its own diagnostic
-          val r = scala.util.Try(WorkbookSource.readRaw(cut.toString))
-          r.isFailure &&
+          // both readers (path and executor-side bytes) must refuse
+          // with their own diagnostic
+          Seq(
+            scala.util.Try(WorkbookSource.readRaw(cut.toString)),
+            scala.util.Try(WorkbookSource.readRawBytes(cut.toString, cutBytes))
+          ).forall(r => r.isFailure &&
             r.failed.get.isInstanceOf[IllegalArgumentException] &&
-            r.failed.get.getMessage.contains(cut.toString)
+            r.failed.get.getMessage.contains(cut.toString))
         } finally java.nio.file.Files.delete(cut)
       } finally java.nio.file.Files.delete(path)
     })
+  }
+
+  test("a workbook cut at its last sheet's local header is refused, never read without that sheet") {
+    import graft.sources.WorkbookFixtures
+    val dir = java.nio.file.Files.createTempDirectory("wbtrunc")
+    val sheets = Seq(
+      "Variants" -> Seq(Seq("Patient ID", "Contact Email"), Seq("P1", "a@x.org")),
+      "HPO" -> Seq(Seq("Patient ID", "HPO ID"), Seq("P1", "HP:0000510")))
+    WorkbookFixtures.writeXlsx(dir.resolve("whole.xlsx"), sheets)
+    val bos = new java.io.ByteArrayOutputStream()
+    WorkbookFixtures.writeXlsx(bos, sheets)
+    val bytes = bos.toByteArray
+    // the last entry's name first appears in its local header, 30
+    // bytes past the header's start (the central directory repeats it)
+    val name = "xl/worksheets/sheet2.xml".getBytes("UTF-8")
+    val header = bytes.indices.find(i => bytes.startsWith(name, i)).get - 30
+    assert(bytes(header) == 'P' && bytes(header + 1) == 'K')
+    // a ZipInputStream reads the first entries and then stops without
+    // error anywhere inside the cut header
+    for (into <- Seq(0, 10, 29)) {
+      val e = intercept[IllegalArgumentException](
+        WorkbookSource.readRawBytes("cut.xlsx", java.util.Arrays.copyOf(bytes, header + into)))
+      assert(e.getMessage.contains("cut.xlsx") && e.getMessage.contains("truncated zip"),
+        e.getMessage)
+    }
+    java.nio.file.Files.write(dir.resolve("cut.xlsx"), java.util.Arrays.copyOf(bytes, header))
+
+    // the distributed scan: one issues row for the cut file, and none
+    // of its rows (its Variants sheet was intact) reach any sheet
+    val corpus = WorkbookSource.readWorkbooks(spark, dir.toString)
+    try {
+      val iss = corpus.issues.collect()
+      assert(iss.length == 1, iss.mkString(";"))
+      assert(iss(0).getAs[String]("step") == "ingest-workbook")
+      assert(iss(0).getAs[String]("source_file").endsWith("cut.xlsx"))
+      val files = corpus.sheets.values.flatMap(
+        _.select("source_file").collect().map(_.getString(0).split('/').last)).toSet
+      assert(files == Set("whole.xlsx"), files)
+    } finally corpus.raw.unpersist()
   }
 
   test("malformed sheet XML raises a named error instead of silently dropping rows") {
