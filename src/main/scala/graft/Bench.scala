@@ -1,23 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle partitions must scale with the DATA, not the cores: at
-    // sf0.1, cores-many partitions are right (driver contract), but a
-    // 100x corpus at 32 partitions puts ~2M rows in every join/agg
-    // task and exhausts the heap. Scale runs pass SPARK_GRAFT_SHUFFLE
-    // (e.g. 256 at sf10) — the local stand-in for the per-job sizing a
-    // real cluster does; AQE coalesces small post-shuffle partitions
-    // back down, so oversizing is cheap.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    // SPARK_GRAFT_MASTER=local-cluster[...] benches over real multi-JVM
-    // executors (see ExecMode); default stays local[cpus].
-    val spark = ExecMode.builder()
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // master, cores and shuffle partitions: see ExecMode
+    val spark = ExecMode.session()
     spark.sparkContext.setLogLevel("WARN")
     // OBSERVED METRICS → artifact (r14 VERDICT #3): entries that carry
     // an `observe` (the containment star tier's `star_rows` degradation
@@ -188,7 +174,8 @@ object Bench {
     }
     // Deterministic name order so per-query timings are comparable
     // across rounds (Map iteration order shifts as entries are added).
-    // SPARK_GRAFT_BENCH_ONLY=a,b,c restricts the run (local iteration).
+    // SPARK_GRAFT_ONLY=a,b,c restricts the run (local iteration), as
+    // in Verify.
     //
     // SPARK_GRAFT_BENCH_SEED=N runs the batch in a SEEDED-SHUFFLED
     // order (deterministic per seed): one-JVM alphabetical marathons
@@ -209,7 +196,7 @@ object Bench {
     // SPARK_GRAFT_BENCH_SEED=alpha restores the alphabetical order
     // (historical replays). Per-name t0 offsets are recorded either
     // way, so the phase classifier never needs to GUESS the order.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val ordered = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
@@ -350,7 +337,7 @@ object Bench {
     if (calIoPre < calIoBand._1 || calIoPre > calIoBand._2) calDriftReasons +=
       f"IO pre probe $calIoPre%.2fs outside clean band [${calIoBand._1}%.2f,${calIoBand._2}%.2f]"
     // Rule (b) needs mid-run probes to carry signal: on a subset run
-    // (SPARK_GRAFT_BENCH_ONLY under ~51 entries) calMid is empty, and
+    // (SPARK_GRAFT_ONLY under ~51 entries) calMid is empty, and
     // "every later probe above the ceiling" would degenerate to the
     // post probe ALONE — exactly the no-signal case the rule was tuned
     // to ignore (clean posts read up to 6.55s). Gate on calMid.nonEmpty

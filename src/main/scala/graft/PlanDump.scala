@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.ExplainMode
 /** Regenerates PLANS.md: formatted physical plans for the flagship
   * queries, as evidence of the plan properties PlanSpec pins —
   * pushdown, pruning, broadcast joins, whole-stage codegen spans, and
-  * the custom operators. Run: `sbt "runMain graft.PlanDump"`.
+  * the custom operators. Run: `SPARK_GRAFT_CPUS=8 sbt "runMain graft.PlanDump"`.
   */
 object PlanDump {
 
@@ -82,17 +82,12 @@ object PlanDump {
       "DSIR importance resampling: token explode -> fixed 4096-bucket hash aggregate (hashing trick: broadcastable at ANY corpus size) -> broadcast delta join -> per-doc mean + Gumbel key, TakeOrderedAndProject(50) — two exchanges total, both on the bucket/doc keys")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = ExecMode.session()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
     val sb = new StringBuilder
     sb ++= "# PLANS — formatted physical plans for the flagship queries\n\n"
-    sb ++= "Generated by `sbt \"runMain graft.PlanDump\"` at sf0.001 (plan\n"
+    sb ++= "Generated by `SPARK_GRAFT_CPUS=8 sbt \"runMain graft.PlanDump\"` at sf0.001 (plan\n"
     sb ++= "STRUCTURE is scale-independent; AQE may re-plan sizes at runtime).\n"
     sb ++= "What to look for: `PushedFilters`/`ReadSchema` on every scan,\n"
     sb ++= "`BroadcastHashJoin` for dimension sides, wide `WholeStageCodegen`\n"

@@ -1,24 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Same sizing knob as Bench: partitions scale with the DATA when
-    // verifying against 10x/100x corpora (default stays cores-many
-    // for the driver contract at sf0.01).
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    // SPARK_GRAFT_MASTER=local-cluster[2,8,2048] runs the same gate
-    // over real multi-JVM executors (see ExecMode) — the serialization
-    // coverage local[N] cannot give.
-    val spark = ExecMode.builder()
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // master, cores and shuffle partitions: see ExecMode
+    // (SPARK_GRAFT_MASTER=local-cluster[2,8,2048] runs the same gate
+    // over real multi-JVM executors)
+    val spark = ExecMode.session()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // OBSERVED METRICS → artifact (r15 VERDICT #7): Bench records

@@ -55,19 +55,10 @@ object Main {
     loop(rest, Map.empty)
   }
 
+  /** The program's one session (see [[graft.ExecMode.session]]): an
+    * in-process caller's session is used as it stands. */
   private[graft] def session(): SparkSession = {
-    // withExtensions: SQL through the CLI gets the same registered
-    // kernel functions (dot_product, byte_dot, ...) and optimizer rules
-    // as the Scala API path — without it spark.sql callers silently
-    // lose the whole extension surface
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val s = graft.ExecMode.session()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

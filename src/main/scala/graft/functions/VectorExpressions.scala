@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.graft.{ColumnBridge, DotProduct, SortedIntersectSize}
@@ -134,55 +134,16 @@ object VectorExpressions {
   def sorted_shingles(tokens: Column, n: Int): Column =
     ColumnBridge.column(
       org.apache.spark.sql.graft.SortedShingles(ColumnBridge.expression(tokens), n))
-
-  /** Register the graft SQL functions on an existing session (the
-    * temp-function path; [[GraftExtensions]] is the config-driven
-    * equivalent for sessions you don't construct). Aggregate builders
-    * return the bare AggregateFunction — the analyzer wraps it.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "byte_dot",
-      exprs => org.apache.spark.sql.graft.ByteDot(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "sorted_intersect_size",
-      exprs => SortedIntersectSize(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "minhash_agg",
-      exprs => org.apache.spark.sql.graft.MinHashAgg(
-        exprs(0), GraftExtensions.intLit(exprs(1), "numPerm")), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "misra_gries",
-      exprs => org.apache.spark.sql.graft.MisraGriesAgg(
-        exprs(0), GraftExtensions.intLit(exprs(1), "k")), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "sign_project",
-      exprs => org.apache.spark.sql.graft.SignProjection(exprs(0),
-        GraftExtensions.intLit(exprs(1), "bits"),
-        GraftExtensions.intLit(exprs(2), "tables")), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "minhash_signature",
-      exprs => org.apache.spark.sql.graft.MinHashSignature(exprs(0),
-        GraftExtensions.intLit(exprs(1), "shingleLen"),
-        GraftExtensions.intLit(exprs(2), "numPerm")), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "simhash64",
-      exprs => org.apache.spark.sql.graft.SimHash64(exprs(0)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "sorted_shingles",
-      exprs => org.apache.spark.sql.graft.SortedShingles(exprs(0),
-        GraftExtensions.intLit(exprs(1), "n")), "scala_udf")
-  }
 }
 
-/** SparkSessionExtensions hook: `.withExtensions(new GraftExtensions)`
-  * or `spark.sql.extensions=graft.functions.GraftExtensions` registers
-  * every graft Catalyst extension on a plain SQL session: the native
-  * functions, the TopKPerKey planner strategy, and the
-  * MultiDistinctToJoin optimizer rule.
+/** SparkSessionExtensions hook: the nine native SQL functions and the
+  * MultiDistinctToJoin optimizer rule. [[graft.ExecMode.session]]
+  * installs it on every session the program builds; a session built
+  * elsewhere gets it through `.withExtensions(new GraftExtensions)` or
+  * `spark.sql.extensions=graft.functions.GraftExtensions`. The planner
+  * strategies are not here: TopKPerKey and PrefixScan nodes are only
+  * built by `TopKPerKeyApi` and `PrefixScanApi`, and each installs its
+  * own strategy on the session it builds the node in.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -239,7 +200,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         .getCanonicalName, "sorted_shingles"),
       (exprs: Seq[Expression]) => org.apache.spark.sql.graft.SortedShingles(
         exprs(0), GraftExtensions.intLit(exprs(1), "n"))))
-    e.injectPlannerStrategy(_ => org.apache.spark.sql.graft.TopKStrategy)
     e.injectOptimizerRule(_ => org.apache.spark.sql.graft.MultiDistinctToJoin)
   }
 }

@@ -30,19 +30,6 @@ object Dedup {
         i => array_join(slice(toks, i + lit(1), lit(n)), " "))))
       .otherwise(array(array_join(toks, " ")))
 
-  /** MinHash permutation family: ONE xxhash64 of the shingle STRING,
-    * then per member a seeded xxhash64 of that base LONG. Hashing the
-    * string once instead of numPerm times is the dominant cost at
-    * scale; re-hashing a fixed 8-byte long is a handful of multiplies.
-    * (A plain affine permutation would be cheaper still, but ANSI mode
-    * makes wrapping long multiplication throw.)
-    */
-  def minhashSignature(sh: Column, numPerm: Int): Column = {
-    val hashes = transform(sh, s => xxhash64(s))
-    array((0 until numPerm).map(p =>
-      array_min(transform(hashes, h => xxhash64(lit(p), h)))): _*)
-  }
-
   /** LSH banding: hash each band's slice of the signature to a bucket
     * key. Docs sharing any (band, key) become candidates.
     */
@@ -51,51 +38,18 @@ object Dedup {
       struct(lit(b).as("band"),
         xxhash64(slice(sig, b * rowsPerBand + 1, rowsPerBand)).as("key"))): _*)
 
-  /** MinHash signatures as a DataFrame op: explode shingles, hash each
-    * with numPerm codegen'd scalar xxhash64 columns, take per-perm mins
-    * in ONE partial-aggregated groupBy. This is the scale path — the
-    * expression form above re-evaluates the shingle array once per
-    * permutation through interpreted higher-order functions (measured
-    * ~40x slower), while this shape is whole-stage-codegen end to end
-    * with a single map-side-combined shuffle on the doc id.
-    */
-  def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-      shingleLen: Int = 3, numPerm: Int = 32): DataFrame = {
-    val exploded = df.select(col(idCol).as("id"),
-      explode(shingles(tokens(col(textCol)), shingleLen)).as("s"))
-    val hashed = exploded.select(col("id"), xxhash64(col("s")).as("h"))
-      .select(col("id") +:
-        (0 until numPerm).map(p => xxhash64(lit(p), col("h")).as(s"h$p")): _*)
-    hashed.groupBy(col("id"))
-      .agg(min(col("h0")).as("h0"),
-        (1 until numPerm).map(p => min(col(s"h$p")).as(s"h$p")): _*)
-      .select(col("id"), array((0 until numPerm).map(p => col(s"h$p")): _*).as("sig"))
-  }
-
-  /** MinHash signatures via the native TypedImperativeAggregate
-    * (org.apache.spark.sql.graft.MinHashAgg): one array-buffer
-    * aggregate instead of numPerm scalar min() columns — same hash
-    * family, same signatures, half the shuffle bookkeeping. Kept as
-    * the aggregate formulation (DedupSpec pins its equivalence); the
-    * pipelines use the map-only [[minhashSignaturesFast]].
-    */
-  def minhashSignaturesAgg(df: DataFrame, idCol: String, textCol: String,
-      shingleLen: Int = 3, numPerm: Int = 32): DataFrame = {
-    import org.apache.spark.sql.graft.MinHashAggApi.minhash_agg
-    import org.apache.spark.sql.graft.ShingleGeneratorApi.shingle_explode
-    df.select(col(idCol).as("id"),
-        shingle_explode(tokens(col(textCol)), shingleLen).as("s"))
-      .groupBy(col("id"))
-      .agg(minhash_agg(col("s"), numPerm).as("sig"))
-  }
-
   /** MinHash signatures MAP-ONLY via the native
     * [[graft.functions.VectorExpressions.minhash_signature]] kernel:
-    * one codegen'd pass per document, bit-identical to
-    * [[minhashSignaturesAgg]] (DedupSpec-pinned) with no generator
-    * row blowup and no groupBy exchange — at 100 TB the exploded
-    * shingle frame was the near-dup pipelines' widest intermediate,
-    * and it existed only to be aggregated straight back down.
+    * one codegen'd pass per document. The hash family is ONE xxhash64
+    * of each shingle string, then per member p a seeded
+    * `xxhash64(p, base)` (hashing the string once instead of numPerm
+    * times is the dominant saving; ANSI mode rules out a wrapping
+    * affine permutation). Bit-identical to the explode + min-column
+    * and `minhash_agg` formulations (test scope, `MinhashReference`;
+    * DedupSpec-pinned) with no generator row blowup and no groupBy
+    * exchange — at 100 TB the exploded shingle frame was the near-dup
+    * pipelines' widest intermediate, and it existed only to be
+    * aggregated straight back down.
     */
   def minhashSignaturesFast(df: DataFrame, idCol: String, textCol: String,
       shingleLen: Int = 3, numPerm: Int = 32): DataFrame =
@@ -394,7 +348,7 @@ object Dedup {
     * earlier-id doc in the increment itself. The production shape at
     * scale: base signatures are computed once and persisted (pass them
     * via `baseSigs` — e.g. yesterday's output of
-    * [[minhashSignaturesAgg]]); each new batch only shingles its own
+    * [[minhashSignaturesFast]]); each new batch only shingles its own
     * docs, and the candidate join touches base state through the
     * banded bucket index, never the base text.
     *

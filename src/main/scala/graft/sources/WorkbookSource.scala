@@ -137,6 +137,11 @@ object WorkbookSource {
         throw new IllegalArgumentException(
           s"$label: not a readable xlsx (zip read failed: ${ex.getMessage})")
     } finally zin.close()
+    // a zip starts with a local header, or (when empty) its end record
+    def startsWith(sig: Int): Boolean = bytes.length >= 4 &&
+      bytes(0) == 'P' && bytes(1) == 'K' && bytes(2) == sig && bytes(3) == sig + 1
+    if (nRead == 0 && !startsWith(3) && !startsWith(5))
+      throw new IllegalArgumentException(s"$label: not a readable xlsx (not a zip archive)")
     if (entries.isEmpty)
       throw new IllegalArgumentException(s"$label: not a readable xlsx (empty zip)")
     val listed = centralDirectoryCount(bytes)

@@ -23,8 +23,8 @@ import org.apache.spark.sql.functions._
   * replication of it. The output pins the `minorEvery`/`compactEvery`
   * cadence guideline in BASELINE.md.
   *
-  * Run: sbt "runMain graft.tools.CompactionBench [sfDir] [batches] [batchDocs]"
-  *      sbt "runMain graft.tools.CompactionBench [sfDir] chain [batchDocs]"
+  * Run: SPARK_GRAFT_SHUFFLE=32 sbt "runMain graft.tools.CompactionBench [sfDir] [batches] [batchDocs]"
+  *      SPARK_GRAFT_SHUFFLE=32 sbt "runMain graft.tools.CompactionBench [sfDir] chain [batchDocs]"
   */
 object CompactionBench {
   def main(args: Array[String]): Unit = {
@@ -32,11 +32,7 @@ object CompactionBench {
     val chainMode = args.length > 1 && args(1) == "chain"
     val nBatches = if (!chainMode && args.length > 1) args(1).toInt else 8
     val batchDocs = if (args.length > 2) args(2).toInt else 200
-    val spark = graft.ExecMode.builder()
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.ExecMode.session()
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = graft.Tables(spark, sfDir, "documents")

@@ -26,11 +26,7 @@ object ContainmentScaleGate {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("target/scale/sf10")
     val blockSize = if (args.length > 1) args(1).toInt else 5000
-    val spark = graft.ExecMode.builder()
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "128"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.ExecMode.session()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

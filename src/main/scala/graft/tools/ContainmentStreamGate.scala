@@ -51,12 +51,7 @@ object ContainmentStreamGate {
     // parse it as a batch size there
     val batchDocs =
       if (!cadenceMode && args.length > 2) args(2).toInt else 500
-    val spark = graft.ExecMode.builder()
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.ExecMode.session()
     spark.sparkContext.setLogLevel("WARN")
     import graft.streaming.{DedupStore, EventStreams}
     val subs = Seq("docs", "postings", "prefix", "pairs")

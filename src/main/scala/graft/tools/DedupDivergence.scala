@@ -21,12 +21,7 @@ object DedupDivergence {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val nBatches = if (args.length > 1) args(1).toInt else 4
     val threshold = if (args.length > 2) args(2).toDouble else 0.7
-    val spark = graft.ExecMode.builder()
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.ExecMode.session()
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = graft.Tables(spark, sfDir, "documents")

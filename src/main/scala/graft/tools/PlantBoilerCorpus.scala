@@ -8,13 +8,13 @@ import org.apache.spark.sql.functions._
   * proving the containment star tier's `star_rows` observe metric
   * lands NONZERO in graft.Bench's artifact (r14 VERDICT #3's done
   * criterion). Only `documents.parquet` is written; point
-  * SPARK_GRAFT_BENCH_ONLY at the containment entries, which read
+  * SPARK_GRAFT_ONLY at the containment entries, which read
   * nothing else.
   *
   * Run: sbt "runMain graft.tools.PlantBoilerCorpus \
   *   /root/testdata/sf0.001 target/boiler 2000"
   * then: SPARK_GRAFT_SF_DIR=target/boiler \
-  *   SPARK_GRAFT_BENCH_ONLY=containment_neardup \
+  *   SPARK_GRAFT_ONLY=containment_neardup \
   *   SPARK_GRAFT_BENCH_OUT=target/bench_boiler.json \
   *   sbt "runMain graft.Bench"
   */
@@ -23,12 +23,7 @@ object PlantBoilerCorpus {
     val src = args(0)
     val out = args(1)
     val blockSize = if (args.length > 2) args(2).toInt else 2000
-    val spark = graft.ExecMode.builder()
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.ExecMode.session()
     spark.sparkContext.setLogLevel("WARN")
     val docs = graft.Tables(spark, src, "documents")
     val maxId = docs.agg(max("doc_id")).head().getLong(0)

@@ -53,12 +53,7 @@ object ScaleUp {
     val inDir = args(0)
     val outDir = args(1)
     val replicas = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.ExecMode.session()
     spark.sparkContext.setLogLevel("WARN")
     scaleAll(spark, inDir, outDir, replicas)
     spark.stop()

@@ -14,12 +14,7 @@ object StageProbe {
     val name = args.headOption.getOrElse("q17_range_join")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 2
-    val spark = graft.ExecMode.builder()
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.ExecMode.session()
     spark.sparkContext.setLogLevel("WARN")
     case class St(var tasks: Int = 0, var runMs: Long = 0L, var maxMs: Long = 0L,
       var inRec: Long = 0L, var outRec: Long = 0L, var shRead: Long = 0L,

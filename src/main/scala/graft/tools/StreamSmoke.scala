@@ -10,7 +10,7 @@ import graft.streaming.EventStreams
   * suite cannot:
   *
   *   SPARK_HOME=$PWD/target/sparkhome SPARK_SCALA_VERSION=2.13 \
-  *   SPARK_GRAFT_MASTER='local-cluster[2,8,2048]' \
+  *   SPARK_GRAFT_MASTER='local-cluster[2,8,2048]' SPARK_GRAFT_SHUFFLE=8 \
   *     sbt "runMain graft.tools.StreamSmoke"
   *
   * Drives transformWithState (RunningTotalsProcessor), the watermarked
@@ -20,13 +20,9 @@ import graft.streaming.EventStreams
   */
 object StreamSmoke {
   def main(args: Array[String]): Unit = {
-    val spark: org.apache.spark.sql.SparkSession = graft.ExecMode.builder()
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.ExecMode.session()
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

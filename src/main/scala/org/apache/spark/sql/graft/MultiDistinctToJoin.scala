@@ -26,7 +26,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *    Expand trigger; one group needs no rewrite).
   *
   * Injected via [[graft.functions.GraftExtensions]]
-  * (injectOptimizerRule) — the Rule[LogicalPlan] extension point.
+  * (injectOptimizerRule) — the Rule[LogicalPlan] extension point — on
+  * every session [[graft.ExecMode.session]] builds.
   */
 object MultiDistinctToJoin extends Rule[LogicalPlan] {
 

@@ -23,8 +23,10 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   *
   * Pieces: logical node -> planner Strategy -> physical exec whose
   * requiredChildDistribution lets EnsureRequirements insert the ONE
-  * key shuffle. Registered per-session via experimental strategies
-  * (or GraftExtensions).
+  * key shuffle. [[TopKPerKeyApi.topKPerKey]], the only builder of the
+  * node, installs [[TopKStrategy]] on the node's session (experimental
+  * strategies), so any session can plan it, also one built without
+  * [[graft.functions.GraftExtensions]].
   */
 case class TopKPerKey(k: Int, keys: Seq[Expression], order: Seq[SortOrder],
     child: LogicalPlan) extends UnaryNode {

@@ -512,4 +512,18 @@ class CliSpec extends SparkSpec {
       SparkSession.setDefaultSession(orig)
     }
   }
+
+  test("an in-process CLI call leaves the caller's session configuration as it stands") {
+    val dir = Files.createTempDirectory("cli-conf")
+    val wb = dir.resolve("wb.xlsx")
+    writeXlsx(wb, Seq("Variants" -> genotypeRows, "HPO" -> phenotypeRows))
+    sys.props("graft.keep-session") = "1"
+    val key = "spark.sql.shuffle.partitions"
+    spark.conf.set(key, "3")
+    try {
+      val out = stdoutOf(graft.cli.Main.auditExcel(Map("--excel-path" -> wb.toString)))
+      assert(out.startsWith("SHEET"), out)
+      assert(spark.conf.get(key) == "3")
+    } finally spark.conf.set(key, "4")
+  }
 }

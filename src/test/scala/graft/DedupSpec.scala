@@ -24,7 +24,8 @@ class DedupSpec extends SparkSpec {
       (3L, "entirely different words compose this other document text"))
       .toDF("id", "text")
     val sigs = df.select(col("id"),
-      Dedup.minhashSignature(Dedup.shingles(Dedup.tokens(col("text")), 3), 16).as("sig"))
+      MinhashReference.minhashSignature(
+        Dedup.shingles(Dedup.tokens(col("text")), 3), 16).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(sigs(1L) == sigs(2L))
     assert(sigs(1L) != sigs(3L))
@@ -49,9 +50,9 @@ class DedupSpec extends SparkSpec {
 
   test("native MinHashAgg produces the same signatures as the min-column formulation") {
     val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
-    val viaCols = Dedup.minhashSignatures(docs, "doc_id", "text", numPerm = 16)
+    val viaCols = MinhashReference.minhashSignatures(docs, "doc_id", "text", numPerm = 16)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val viaAgg = Dedup.minhashSignaturesAgg(docs, "doc_id", "text", numPerm = 16)
+    val viaAgg = MinhashReference.minhashSignaturesAgg(docs, "doc_id", "text", numPerm = 16)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(viaAgg == viaCols && viaAgg.nonEmpty)
     // the map-only kernel the pipelines run is bit-identical too
@@ -264,7 +265,7 @@ class DedupSpec extends SparkSpec {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(out == Set(11L, 13L))
     // the persisted-state path: precomputed base signatures, same answer
-    val sigs = Dedup.minhashSignaturesAgg(base, "doc_id", "text")
+    val sigs = MinhashReference.minhashSignaturesAgg(base, "doc_id", "text")
     val out2 = Dedup.dedupIncrement(base, inc, "doc_id", "text",
       jaccardThreshold = 0.5, baseSigs = Some(sigs))
       .select("doc_id").collect().map(_.getLong(0)).toSet

@@ -313,7 +313,7 @@ class PropertySpec extends SparkSpec {
     check(Prop.forAll(corpusGen) { docs =>
       val df = docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text")
-      val mhAgg = Dedup.minhashSignaturesAgg(df, "doc_id", "text", numPerm = 8)
+      val mhAgg = MinhashReference.minhashSignaturesAgg(df, "doc_id", "text", numPerm = 8)
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
       val mhFast = Dedup.minhashSignaturesFast(df, "doc_id", "text", numPerm = 8)
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap

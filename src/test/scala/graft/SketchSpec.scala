@@ -68,7 +68,6 @@ class SketchSpec extends SparkSpec {
   }
 
   test("SQL registration: misra_gries and minhash_agg callable from spark.sql") {
-    graft.functions.VectorExpressions.register(spark)
     val df = (Seq.fill(50)("hot") ++ (1 to 30).map(i => s"cold_$i")).toDF("tok")
     df.createOrReplaceTempView("sql_sketch_in")
     val cands = sqlf("SELECT misra_gries(tok, 8) AS c FROM sql_sketch_in")

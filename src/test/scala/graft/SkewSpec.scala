@@ -13,7 +13,7 @@ import graft.operators.Skew
   * and (2) that salted AGGREGATION remains exact — the case AQE does
   * NOT cover (OptimizeSkewedJoin only rewrites join partitions;
   * a skewed groupBy key still lands on one reducer). The scaladoc on
-  * [[Skew]] records the decision rule; `sbt "runMain graft.PlanDump"`
+  * [[Skew]] records the decision rule; `SPARK_GRAFT_CPUS=8 sbt "runMain graft.PlanDump"`
   * dumps both plans side by side in PLANS.md.
   */
 class SkewSpec extends SparkSpec {

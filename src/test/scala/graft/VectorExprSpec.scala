@@ -37,7 +37,6 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("SQL registration: dot_product callable from spark.sql") {
-    VectorExpressions.register(spark)
     val r = spark.sql(
       "SELECT dot_product(array(1d,2d,3d), array(4d,5d,6d)) AS d").collect()
     assert(r(0).getDouble(0) == 32.0)
@@ -68,10 +67,18 @@ class VectorExprSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.graft.{ColumnBridge, MultiDistinctToJoin}
     val li = Tables(spark, "/root/testdata/sf0.001", "lineitem")
-    val df = li.agg(
+    def agg = li.agg(
       countDistinct(col("l_partkey")).as("n_parts"),
       countDistinct(col("l_suppkey")).as("n_supps"),
       count(lit(1)).as("n_rows"))
+    // the shared session carries the rule (ExecMode.session), so the
+    // baseline is planned and run with it excluded: Spark's own Expand
+    val excluded = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(excluded, MultiDistinctToJoin.ruleName)
+    val df = agg
+    val (baseRows, basePlan) =
+      try (df.collect().toSeq, df.queryExecution.sparkPlan.toString)
+      finally spark.conf.unset(excluded)
     // apply at the analyzed stage (injected operator-optimization rules
     // run before RewriteDistinctAggregates erases the isDistinct flags)
     val analyzed = df.queryExecution.analyzed
@@ -79,9 +86,11 @@ class VectorExprSpec extends SparkSpec {
     assert(rewritten != analyzed, "rule should fire on two distinct columns")
     val out = ColumnBridge.ofRows(spark, rewritten)
     assert(out.columns.toSeq == df.columns.toSeq)
-    assert(out.collect().toSeq == df.collect().toSeq)
+    assert(out.collect().toSeq == baseRows)
     assert(!out.queryExecution.sparkPlan.toString.contains("Expand"))
-    assert(df.queryExecution.sparkPlan.toString.contains("Expand"), "baseline uses Expand")
+    assert(basePlan.contains("Expand"), "baseline uses Expand")
+    // the shared session's own plan of the same aggregate is rewritten
+    assert(!agg.queryExecution.sparkPlan.toString.contains("Expand"))
     // conservative: single distinct column or grouped aggregates untouched
     val single = li.agg(countDistinct(col("l_partkey")).as("n")).queryExecution.analyzed
     assert(MultiDistinctToJoin(single) == single)
@@ -115,6 +124,29 @@ class VectorExprSpec extends SparkSpec {
       assert(s2.sql(
         "SELECT sorted_intersect_size(array('a','b','c'), array('b','c','d'))")
         .collect()(0).getInt(0) == 2)
+    } finally {
+      SparkSession.setActiveSession(orig)
+      SparkSession.setDefaultSession(orig)
+    }
+  }
+
+  test("ExecMode.session: a freshly built session resolves the SQL kernels and plans multi-distinct without Expand") {
+    import org.apache.spark.sql.SparkSession
+    val orig = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val s2 = ExecMode.session()
+      assert(s2 ne orig)
+      assert(s2.sql("SELECT dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d))")
+        .collect()(0).getDouble(0) == 11.0)
+      val sig = s2.sql("SELECT minhash_agg(s, 8) FROM VALUES ('a b c'), ('d e f') AS t(s)")
+        .collect()(0).getSeq[Long](0)
+      assert(sig.length == 8)
+      Tables(s2, "/root/testdata/sf0.001", "lineitem").createOrReplaceTempView("li")
+      val twoDistinct = s2.sql(
+        "SELECT count(DISTINCT l_partkey) AS a, count(DISTINCT l_suppkey) AS b FROM li")
+      assert(!twoDistinct.queryExecution.sparkPlan.toString.contains("Expand"))
     } finally {
       SparkSession.setActiveSession(orig)
       SparkSession.setDefaultSession(orig)

@@ -363,6 +363,17 @@ class WorkbookFuzzSpec extends SparkSpec {
     } finally java.nio.file.Files.delete(p)
   }
 
+  test("not a zip at all, from bytes: named as not a zip archive; a real empty zip stays empty zip") {
+    val e = intercept[IllegalArgumentException](
+      WorkbookSource.readRawBytes("plain.xlsx", "just text, no PK header".getBytes("UTF-8")))
+    assert(e.getMessage == "plain.xlsx: not a readable xlsx (not a zip archive)", e.getMessage)
+    val bos = new java.io.ByteArrayOutputStream()
+    new java.util.zip.ZipOutputStream(bos).close()
+    val empty = intercept[IllegalArgumentException](
+      WorkbookSource.readRawBytes("empty.xlsx", bos.toByteArray))
+    assert(empty.getMessage == "empty.xlsx: not a readable xlsx (empty zip)", empty.getMessage)
+  }
+
   test("decompression bomb: oversized inflation degrades to the named-refusal path, never OOM") {
     // one zip entry of 65 MiB of zeros deflates to ~64 KiB; the
     // bounded read must abort at the 64 MiB per-entry cap with the

@@ -8,7 +8,7 @@
 #
 #   1. run the driver-vs-board audit on the artifact, collect the
 #      FAIL-list entry names;
-#   2. re-run graft.Bench solo (SPARK_GRAFT_BENCH_ONLY=<those>) N
+#   2. re-run graft.Bench solo (SPARK_GRAFT_ONLY=<those>) N
 #      times, cold JVM each, same seed/mode/sf as the driver config;
 #   3. REFUSE ITSELF if any re-run's own probes fire the drift alarm
 #      (a hot box cannot attribute a hot box — the judge's r18 solo
@@ -80,7 +80,7 @@ i=1
 while [ "$i" -le "$runs" ]; do
   out=target/attrib_${name}_run${i}.json
   echo "--- solo re-run $i/$runs -> $out"
-  SPARK_GRAFT_BENCH_ONLY="$flagged" SPARK_GRAFT_CPUS="$cpus" \
+  SPARK_GRAFT_ONLY="$flagged" SPARK_GRAFT_CPUS="$cpus" \
     SPARK_GRAFT_SF_DIR="$sfdir" SPARK_GRAFT_BENCH_OUT="$out" \
     sbt -batch "runMain graft.Bench" >/dev/null 2>&1
   if [ ! -s "$out" ]; then
